@@ -9,26 +9,12 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from openocr_spark.functions.otsl import otsl_to_html
-from openocr_spark.functions.text import (
-    pred_reverse,
-    truncate_repeated_tail,
-    truncate_repetitive_content,
-)
+from openocr_spark.functions.text import truncate_repetitive_content
 
 
 @pandas_udf(StringType())
 def truncate_repetitive_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda t: truncate_repetitive_content(t) if t is not None else None)
-
-
-@pandas_udf(StringType())
-def truncate_tail_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda t: truncate_repeated_tail(t) if t is not None else None)
-
-
-@pandas_udf(StringType())
-def pred_reverse_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda t: pred_reverse(t) if t is not None else None)
 
 
 @pandas_udf(StringType())

@@ -1,5 +1,6 @@
 """Kernel space: pure numpy functions that run inside Arrow-batched
-pandas UDFs (`mapInPandas`/`applyInPandas`). Nothing here touches Spark;
+Python stages (the extraction and media-decode kernels are `mapInArrow`:
+Arrow batch in, Arrow batch out). Nothing here touches Spark;
 everything is deterministic and unit-testable on plain arrays.
 
 The reference's neural kernels are replaced by deterministic surrogate
@@ -7,7 +8,7 @@ kernels with identical *operator semantics* (SURVEY.md §7.0): detection is
 binarize → connected components → box filtering/expansion → reading order;
 recognition is per-timestep logits → CTC greedy decode. Interfaces are
 `ndarray → ndarray`, so real ONNX models can be dropped in behind the same
-mapInPandas boundary later (SURVEY §4 O8).
+Arrow kernel boundary later (SURVEY §4 O8).
 """
 
 from openocr_spark.kernels.detection import (  # noqa: F401

@@ -26,10 +26,8 @@ formats are single-page):
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 _MAGIC = b"FAKEIMG1"
@@ -907,56 +905,72 @@ def decode_bytes(data: bytes) -> list[np.ndarray]:
 def decode_media(df: DataFrame) -> DataFrame:
     """(doc_id, media_ref, content:binary) → one row per page
     (the check_and_read PDF→pages 1→N expansion, SURVEY §2.1 S2, as a
-    mapInPandas explode)."""
+    mapInArrow explode: the page columns are built per batch and
+    doc_id/media_ref follow their source row through an Arrow `take`)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, ref, content in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["content"]
-            ):
-                for page_no, px in enumerate(decode_bytes(bytes(content))):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "media_ref": ref,
-                            "page_no": page_no,
-                            "height": px.shape[0],
-                            "width": px.shape[1],
-                            "pixels": px.tobytes(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "page_no", "height", "width", "pixels",
+    def kernel(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            src, page_no, heights, widths, pixels = [], [], [], [], []
+            content = batch.column("content")
+            for i in range(batch.num_rows):
+                for p, px in enumerate(decode_bytes(content[i].as_py())):
+                    src.append(i)
+                    page_no.append(p)
+                    heights.append(px.shape[0])
+                    widths.append(px.shape[1])
+                    pixels.append(px.tobytes())
+            rows = pa.array(src, type=pa.int32())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("doc_id").take(rows),
+                    batch.column("media_ref").take(rows),
+                    pa.array(page_no, type=pa.int32()),
+                    pa.array(heights, type=pa.int32()),
+                    pa.array(widths, type=pa.int32()),
+                    pa.array(pixels, type=pa.binary()),
                 ],
+                names=["doc_id", "media_ref", "page_no", "height", "width", "pixels"],
             )
 
-    return df.mapInPandas(kernel, schema=DECODED_SCHEMA)
+    return df.mapInArrow(kernel, schema=DECODED_SCHEMA)
 
 
 def extract_features(decoded: DataFrame) -> DataFrame:
     """Per-page feature extraction (vectorized numpy per Arrow batch) —
-    the stand-in for embedding/feature models over decoded pixels."""
+    the stand-in for embedding/feature models over decoded pixels. The
+    pixel cells are wrapped zero-copy (`as_buffer()`), never copied into
+    Python bytes."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def kernel(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            heights = batch.column("height").to_pylist()
+            widths = batch.column("width").to_pylist()
+            pixels = batch.column("pixels")
             means, stds, nz = [], [], []
-            for h, w, buf in zip(pdf["height"], pdf["width"], pdf["pixels"]):
-                px = np.frombuffer(buf, dtype=np.uint8).reshape(int(h), int(w))
+            for i in range(batch.num_rows):
+                px = np.frombuffer(pixels[i].as_buffer(), dtype=np.uint8).reshape(
+                    int(heights[i]), int(widths[i])
+                )
                 means.append(float(px.mean()))
                 stds.append(float(px.std()))
                 nz.append(float((px > 0).mean()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "page_no": pdf["page_no"],
-                    "mean_px": means,
-                    "std_px": stds,
-                    "nonzero_frac": nz,
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("doc_id"),
+                    batch.column("media_ref"),
+                    batch.column("page_no"),
+                    pa.array(means, type=pa.float64()),
+                    pa.array(stds, type=pa.float64()),
+                    pa.array(nz, type=pa.float64()),
+                ],
+                names=[
+                    "doc_id", "media_ref", "page_no", "mean_px", "std_px",
+                    "nonzero_frac",
+                ],
             )
 
-    return decoded.mapInPandas(kernel, schema=FEATURE_SCHEMA)
+    return decoded.mapInArrow(kernel, schema=FEATURE_SCHEMA)

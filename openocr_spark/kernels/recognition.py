@@ -121,16 +121,3 @@ def gtc_decode(
     if only_gtc:
         return gtc, None
     return gtc, ctc_greedy_decode(ctc_logits)
-
-
-def ctc_greedy_decode_batch(
-    logits_batch: list[np.ndarray],
-) -> tuple[list[str], list[float]]:
-    """Decode a batch. Inside one Arrow batch this is the analog of the
-    reference's padded-batch forward (tools/infer_rec.py:363-429)."""
-    texts, scores = [], []
-    for lg in logits_batch:
-        t, s = ctc_greedy_decode(lg)
-        texts.append(t)
-        scores.append(s)
-    return texts, scores

@@ -12,7 +12,7 @@ SURVEY §3.1-3.2 from tools/infer_e2e.py:220-402 / infer_doc_onnx.py:758-1028):
               distributes media work uniformly regardless of how many
               media spans a single document has (media-heavy skew tail,
               SURVEY §4 O5)
-            → mapInPandas det+rec kernel (Arrow-batched; per-batch numpy)
+            → mapInArrow det+rec kernel (Arrow batch in, Arrow batch out)
   → unionByName
   → groupBy(doc_id): collect → array_sort by offset → index ⇒ `order`
     [second shuffle, partitioned by doc_id]
@@ -32,10 +32,7 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -183,8 +180,8 @@ def _process_media_arrays(
 ) -> str:
     """Per-media kernel flow: detect → reading order → recognize → filter
     → newline-join (infer_e2e.py:155-218 infer_single_image analog).
-    `decode` is the resolved decode-head kernel — the batch kernels
-    resolve it ONCE at closure-build time (driver side, so a bad
+    `decode` is the resolved decode-head kernel — the batch kernel
+    resolves it ONCE at closure-build time (driver side, so a bad
     cfg.rec_head fails before any job launches, and the hot loop skips
     168k dispatch lookups); None resolves here for direct callers."""
     if decode is None:
@@ -202,11 +199,7 @@ def _process_media_arrays(
     for box, ridx in zip(boxes, assign_regions_to_boxes(boxes, pts)):
         if ridx < 0:
             continue
-        reg = regions[ridx]
-        logits = reg["logits"]
-        if isinstance(logits, (bytes, bytearray)):
-            logits = _logits_from_buffer(logits, int(reg["logits_t"]))
-        text, score = decode(logits)
+        text, score = decode(regions[ridx]["logits"])
         if score >= cfg.drop_score or cfg.rec_head in NO_CONF_HEADS:
             texts.append(text)
     return "\n".join(texts)
@@ -253,104 +246,71 @@ def _logits_from_buffer(buf, t: int) -> np.ndarray:
     )
 
 
-def _media_kernel_arrow(cfg: ExtractConfig):
-    """mapInArrow kernel for the joined-payload path.
+def _media_kernel(cfg: ExtractConfig):
+    """mapInArrow det+rec kernel: an Arrow batch of media spans in, an
+    Arrow batch of SPAN_ROW out.
 
-    The payload columns are wide binary cells (~60KB score maps, logits);
-    a pandas kernel would materialize every cell as a Python bytes object
-    (copy) and every region as a dict — measured 59s for an 11GB batch
-    stream where the actual decode work is ~2s. Arrow RecordBatches let
-    numpy wrap the buffers zero-copy (`scalar.as_buffer()`), so only the
-    small string/int columns are materialized."""
+    Each row's payload comes from the batch schema. With a `score_map`
+    column (joined-payload path) the cells are wide binaries (~60KB
+    score maps, logits) that numpy wraps zero-copy through
+    `scalar.as_buffer()` — a pandas kernel would copy every cell into a
+    Python bytes object (measured 59s for an 11GB batch stream where the
+    decode work is ~2s). Without one, the payload is generated
+    deterministically from media_ref inside the executor (fixture path —
+    distributes generation, nothing crosses the driver). doc_id, offset
+    and media_ref pass through to the output as Arrow columns."""
 
     decode = _decode_fn(cfg.rec_head, cfg.token_map)  # driver-side fail-fast
+
+    def joined_payloads(batch):
+        heights = batch.column("height").to_pylist()
+        widths = batch.column("width").to_pylist()
+        sm_col = batch.column("score_map")
+        regions_col = batch.column("regions")
+        for i in range(batch.num_rows):
+            prob = _prob_from_buffer(
+                sm_col[i].as_buffer(), int(heights[i]), int(widths[i])
+            )
+            regions = [
+                {
+                    "points": r["points"].as_py(),
+                    "logits": _logits_from_buffer(
+                        r["logits"].as_buffer(), int(r["logits_t"].as_py())
+                    ),
+                }
+                for r in regions_col[i]
+            ]
+            yield prob, regions
+
+    def synthesized_payloads(batch):
+        from openocr_spark.fixtures import payload_for_media_ref
+
+        for ref in batch.column("media_ref").to_pylist():
+            p = payload_for_media_ref(ref)
+            yield p["score_map"], p["regions"]
 
     def kernel(batches):
         import pyarrow as pa
 
         for batch in batches:
-            n = batch.num_rows
-            doc_ids = batch.column("doc_id").to_pylist()
-            offsets = batch.column("offset").to_pylist()
-            refs = batch.column("media_ref").to_pylist()
-            heights = batch.column("height").to_pylist()
-            widths = batch.column("width").to_pylist()
-            sm_col = batch.column("score_map")
-            regions_col = batch.column("regions")
-            out_text = []
-            for i in range(n):
-                prob = _prob_from_buffer(
-                    sm_col[i].as_buffer(), int(heights[i]), int(widths[i])
-                )
-                regs = regions_col[i]
-                regions = []
-                for j in range(len(regs)):
-                    r = regs[j]
-                    logits = _logits_from_buffer(
-                        r["logits"].as_buffer(), int(r["logits_t"].as_py())
-                    )
-                    regions.append(
-                        {"points": r["points"].as_py(), "logits": logits}
-                    )
-                out_text.append(
-                    _process_media_arrays(prob, regions, cfg, decode)
-                )
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "doc_id": doc_ids,
-                    "offset": pa.array(
-                        [int(o) for o in offsets], type=pa.int32()
-                    ),
-                    "kind": ["media"] * n,
-                    "text": out_text,
-                    "media_ref": refs,
-                }
+            payloads = (
+                joined_payloads
+                if "score_map" in batch.schema.names
+                else synthesized_payloads
             )
-
-    return kernel
-
-
-def _media_kernel(cfg: ExtractConfig, synthesize: bool):
-    """mapInPandas kernel. If `synthesize`, payloads are generated
-    deterministically from media_ref inside the executor (fixture path —
-    distributes generation, nothing crosses the driver); otherwise the
-    payload columns come from the joined media_payloads table."""
-
-    decode = _decode_fn(cfg.rec_head, cfg.token_map)  # driver-side fail-fast
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from openocr_spark.fixtures import payload_for_media_ref
-
-        for pdf in batches:
-            out_text = []
-            # iterate materialized column lists, not .iloc — per-row
-            # pandas scalar indexing costs µs each and this loop runs
-            # once per media span (guide §1.2 per-task work)
-            if synthesize:
-                for ref in pdf["media_ref"].tolist():
-                    p = payload_for_media_ref(ref)
-                    out_text.append(
-                        _process_media_arrays(
-                            p["score_map"], p["regions"], cfg, decode
-                        )
-                    )
-            else:
-                for h, w, sm, regs in zip(
-                    pdf["height"].tolist(), pdf["width"].tolist(),
-                    pdf["score_map"], pdf["regions"],
-                ):
-                    prob = _prob_from_buffer(sm, int(h), int(w))
-                    out_text.append(
-                        _process_media_arrays(prob, list(regs), cfg, decode)
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "offset": pdf["offset"].astype("int32"),
-                    "kind": "media",
-                    "text": out_text,
-                    "media_ref": pdf["media_ref"],
-                }
+            texts = [
+                _process_media_arrays(prob, regions, cfg, decode)
+                for prob, regions in payloads(batch)
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("doc_id"),
+                    batch.column("offset"),
+                    pa.array(["media"] * batch.num_rows, type=pa.string()),
+                    pa.array(texts, type=pa.string()),
+                    batch.column("media_ref"),
+                ],
+                names=["doc_id", "offset", "kind", "text", "media_ref"],
             )
 
     return kernel
@@ -397,7 +357,6 @@ def extract_flat(
     )
 
     media = spans.filter(F.col("kind") == "media").select("doc_id", "offset", "media_ref")
-    n_parts = cfg.media_partitions or 2 * spark.sparkContext.defaultParallelism
     if media_payloads is not None:
         # the equi-join on media_ref IS the salt on this path: its output
         # is distributed by media_ref (or by the payload table's own
@@ -407,28 +366,14 @@ def extract_flat(
         # bucket(N, media_ref) specs make this a storage-partitioned
         # join: the payload bytes never shuffle at all.
         media = media.join(media_payloads, "media_ref")
-        if cfg.ratio_sort:
-            # optional shape-uniform batching (RatioSampler analog,
-            # SURVEY O5): a local sort — costs a per-partition spill of
-            # payload bytes, only worth it when the kernel pads batches
-            media = media.sortWithinPartitions(
-                (F.col("width") / F.col("height")).alias("_ratio")
-            )
     else:
         # synthesize path carries only (doc_id, offset, media_ref): the
         # ONE salted wide shuffle distributing media work uniformly,
         # immune to media-heavy documents (media_ref is unique per span)
-        media = media.repartition(n_parts, "media_ref")
-    if media_payloads is not None:
-        # wide binary payload columns → Arrow-native kernel (zero-copy)
-        media_out = media.mapInArrow(
-            _media_kernel_arrow(cfg), schema=schemas.SPAN_ROW
-        ).select("doc_id", "offset", "kind", "text", "media_ref")
-    else:
-        media_out = media.mapInPandas(
-            _media_kernel(cfg, synthesize=True), schema=schemas.SPAN_ROW
-        ).select("doc_id", "offset", "kind", "text", "media_ref")
-
+        media = media.repartition(
+            2 * spark.sparkContext.defaultParallelism, "media_ref"
+        )
+    media_out = media.mapInArrow(_media_kernel(cfg), schema=schemas.SPAN_ROW)
     return non_media.unionByName(media_out)
 
 

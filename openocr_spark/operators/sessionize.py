@@ -31,17 +31,3 @@ def sessionize(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-
-
-def session_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-) -> DataFrame:
-    s = sessionize(events, user_col, ts_col, gap_seconds)
-    return s.groupBy(user_col).agg(
-        F.max("session_seq").cast("long").alias("n_sessions"),
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 4).alias("total_value"),
-    )

@@ -51,14 +51,6 @@ def punct_ratio(text: Column) -> Column:
     return F.length(stripped) / F.greatest(F.length(text), F.lit(1))
 
 
-def avg_token_len(text: Column) -> Column:
-    toks = F.split(text, " ")
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
-    )
-    return total / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_score(text: Column) -> Column:
     """Composite quality heuristic in [0,1]: favors mid-length docs with
     some stopword mass and low punctuation density (the classic

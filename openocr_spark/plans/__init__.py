@@ -27,10 +27,6 @@ def pushed_filters(df: DataFrame) -> str:
     return "\n".join(ln for ln in plan.splitlines() if "PushedFilters" in ln)
 
 
-def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
-    return fragment in pushed_filters(df)
-
-
 def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df)
 

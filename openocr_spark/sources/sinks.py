@@ -79,16 +79,3 @@ def write_extractions_json(extractions: DataFrame, path: str) -> None:
     extractions.select(F.to_json(F.struct("*")).alias("line")).write.mode(
         "overwrite"
     ).text(path)
-
-
-def write_extractions(extractions: DataFrame, path: str, n_buckets: int = 16) -> None:
-    """Output table layout: parquet partitioned by doc_id hash bucket —
-    the parquet stand-in for the Iceberg spec in iceberg.py."""
-    from openocr_spark.operators.manifest import bucket_of
-
-    (
-        extractions.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )

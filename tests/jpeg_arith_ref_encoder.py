@@ -14,12 +14,15 @@ bit-identically to the Huffman entropy layer.
 
 from __future__ import annotations
 
+import os
 import struct
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+_TESTS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(_TESTS))
+sys.path.insert(0, _TESTS)
 from jpeg_ref_encoder import ZIG, K1, _color_planes, _dqt_seg, _seg, fdct_8x8  # noqa: E402
 
 from openocr_spark.kernels.jpeg_arith import FIXED_BIN, QE_TABLE  # noqa: E402

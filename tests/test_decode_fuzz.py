@@ -225,6 +225,37 @@ def test_bitflip_terminates_cleanly(fmt, off, bit):
         assert p.ndim in (2, 3) and p.size > 0
 
 
+def test_next_marker_returns_len_at_end_of_data():
+    """An entropy segment that ends on stuffing (FF00) or fill (FFFF)
+    with no marker after it scans to the end of the data."""
+    from openocr_spark.kernels.jpeg_format import _next_marker
+
+    for data in (b"\x11\x22\xff\x00", b"\x11\xff\xff"):
+        assert _next_marker(data, 0) == len(data)
+
+
+@pytest.mark.parametrize("fmt", ["jpeg", "jpeg_arith"])
+def test_jpeg_cut_after_stuffed_ff00_is_not_a_type_error(fmt):
+    """Cutting a JPEG stream right after an FF00 pair once made the
+    marker scan return None, which escaped decode_bytes as TypeError."""
+    data = STREAMS[fmt]
+    cuts = []
+    i = data.find(b"\xff\x00")
+    while i >= 0:
+        cuts.append(i + 2)
+        i = data.find(b"\xff\x00", i + 1)
+    assert cuts
+    for cut in cuts:
+        try:
+            pages = decode_bytes(data[:cut])
+        except TypeError as e:
+            raise AssertionError(f"cut at {cut}: {e!r}") from e
+        except Exception:
+            continue
+        for p in pages:
+            assert isinstance(p, np.ndarray) and p.dtype == np.uint8
+
+
 @given(cut=st.floats(0.01, 0.999), off=st.floats(0.0, 0.999), bit=st.integers(0, 7))
 @settings(max_examples=60, deadline=2000)
 def test_wav_parser_corruption_contract(cut, off, bit):

@@ -4,8 +4,13 @@ its structural shuffle budget (SURVEY §4)."""
 
 from pyspark.sql import functions as F
 
-from openocr_spark import plans
-from openocr_spark.fixtures import documents_df
+from openocr_spark import plans, schemas
+from openocr_spark.fixtures import (
+    documents_df,
+    gen_documents_pdf,
+    gen_media_payloads_pdf,
+    media_refs_of,
+)
 from openocr_spark.operators.extract import extract
 from openocr_spark.queries import SPARK_Q
 
@@ -46,6 +51,43 @@ def test_extract_shuffle_budget(spark):
     plan = plans.physical_plan(out)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+    _assert_arrow_kernel(extract(_local(spark, gen_documents_pdf(50), schemas.DOCUMENTS)))
+
+
+def _local(spark, pdf, schema):
+    """A fixture table as a local relation: no Python stage of its own,
+    so every Python node in a plan over it belongs to the pipeline."""
+    return spark.createDataFrame(pdf.to_dict("records"), schema=schema)
+
+
+def _assert_arrow_kernel(df) -> None:
+    """One kernel shape: the Python stage is Arrow batch in, Arrow batch
+    out — never a pandas round trip."""
+    plan = plans.physical_plan(df)
+    assert "MapInArrow" in plan, plan
+    assert "MapInPandas" not in plan, plan
+
+
+def test_media_kernels_plan_as_map_in_arrow(spark):
+    import numpy as np
+
+    from openocr_spark.kernels.media_decode import (
+        decode_media,
+        encode_fake,
+        extract_features,
+    )
+
+    pdf = gen_documents_pdf(20)
+    payloads = gen_media_payloads_pdf(media_refs_of(pdf))
+    _assert_arrow_kernel(extract(
+        _local(spark, pdf, schemas.DOCUMENTS),
+        _local(spark, payloads, schemas.MEDIA_PAYLOADS),
+    ))
+    media = spark.createDataFrame(
+        [("d0", "m0", encode_fake([np.zeros((4, 6), dtype=np.uint8)]))],
+        "doc_id string, media_ref string, content binary",
+    )
+    _assert_arrow_kernel(extract_features(decode_media(media)))
 
 
 def test_cosine_topk_is_distributed_takeordered(spark):

@@ -37,6 +37,19 @@ def test_minhash_arraymin_equals_explode_groupby_form(spark):
     old = {tuple(r) for r in sh.groupBy("id").agg(*aggs).collect()}
     assert new == old and len(new) > 0
 
+    # id_col must be a key: a repeated id yields one signature row per
+    # input row, each over that row's own text (never a merged one)
+    dup = spark.createDataFrame(
+        [(1, "a b c d e"), (1, "q w e r t y u i o p"), (2, "a b c d e")],
+        "doc_id long, text string",
+    )
+    rows = dedup.minhash_signatures(dup, "doc_id", "text").collect()
+    sig = {tuple(r)[1:] for r in rows if r["id"] == 2}
+    assert sorted(r["id"] for r in rows) == [1, 1, 2]
+    assert {tuple(r)[1:] for r in rows if r["id"] == 1} == sig | {
+        tuple(r)[1:] for r in new if r[0] == 7
+    }
+
 
 def test_lsh_late_distinct_no_duplicate_pairs(spark):
     """near_dup_pairs_lsh moved the candidate distinct AFTER the
