@@ -2,7 +2,7 @@
 
 Everything derives from md5 of stable string keys — no global RNG, no
 wall clock — so the same corpus can be generated *distributed* (inside
-mapInPandas on executors, scaling to any size) or single-node (for the
+row kernels on executors, scaling to any size) or single-node (for the
 oracle), byte-identically.
 
 Shapes mirror the reference's data model:
@@ -377,46 +377,33 @@ def gen_layout_blocks_pdf(n_docs: int) -> pd.DataFrame:
 
 def layout_blocks_df(doc_ids):
     """Distributed layout-block fixture from a (doc_id) DataFrame."""
+    from openocr_spark.rowmap import map_rows
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"].astype(str).tolist():
-                rows.extend(layout_blocks_for_doc(d))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "cls_id", "label", "score",
-                    "bbox", "custom_value", "text",
-                ],
-            )
-
-    return doc_ids.select("doc_id").mapInPandas(gen, schema=LAYOUT_SCHEMA)
+    return map_rows(
+        doc_ids.select("doc_id"),
+        lambda row: layout_blocks_for_doc(str(row["doc_id"])),
+        LAYOUT_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------- Spark side
 
 
 def documents_df(spark, n_docs: int, partitions: int | None = None):
-    """Distributed deterministic corpus: spark.range → mapInPandas
-    generator. Scales to arbitrary n_docs with no driver materialization
+    """Distributed deterministic corpus: spark.range → a row kernel per
+    doc index. Scales to arbitrary n_docs with no driver materialization
     (this is how the bench corpus is built)."""
     from openocr_spark import schemas
+    from openocr_spark.rowmap import map_rows
 
     parts = partitions or spark.sparkContext.defaultParallelism
     rng_df = spark.range(0, n_docs, 1, parts)
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for i in pdf["id"].tolist():
-                did = doc_id_for(int(i))
-                out.append(
-                    {"doc_id": did, "spans": spans_for_doc(did, skew=is_skew_doc(int(i)))}
-                )
-            yield pd.DataFrame(out)
+    def gen(row):
+        did = doc_id_for(row["id"])
+        yield {"doc_id": did, "spans": spans_for_doc(did, skew=is_skew_doc(row["id"]))}
 
-    return rng_df.mapInPandas(gen, schema=schemas.DOCUMENTS)
+    return map_rows(rng_df, gen, schemas.DOCUMENTS)
 
 
 def media_payloads_df(spark, documents):
@@ -424,15 +411,13 @@ def media_payloads_df(spark, documents):
     from pyspark.sql import functions as F
 
     from openocr_spark import schemas
+    from openocr_spark.rowmap import map_rows
 
     refs = (
         documents.select(F.explode("spans").alias("s"))
         .filter(F.col("s.kind") == "media")
         .select(F.col("s.media_ref").alias("media_ref"))
     )
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame([payload_row(r) for r in pdf["media_ref"].tolist()])
-
-    return refs.mapInPandas(gen, schema=schemas.MEDIA_PAYLOADS)
+    return map_rows(
+        refs, lambda row: [payload_row(row["media_ref"])], schemas.MEDIA_PAYLOADS
+    )

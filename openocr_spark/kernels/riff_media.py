@@ -1,7 +1,7 @@
 """Audio/video multimodal kernels — the non-image legs of the
 opaque-binary-column model (brief: image/audio/video as binary columns
-with typed metadata; decode / feature-extract / frame-sample as
-vectorized kernels under mapInPandas).
+with typed metadata; decode / feature-extract / frame-sample as row
+kernels over Arrow batches, operators/multimodal.py).
 
 From-scratch where the format is honestly reproducible offline:
   decode_wav        — RIFF/WAVE PCM (8/16/24/32-bit int, 32/64-bit

@@ -152,6 +152,8 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # materializes once, truncates the lineage, and its blocks are
     # reclaimed by the ContextCleaner when the frame is unreferenced
     # (the "checkpoint the signature table" note below, made real).
+    # local-only: assumes no executor loss (the checkpoint lives on executors);
+    # a cluster run needs a reliable checkpoint() or exchange reuse instead
     bands = lsh_bands(
         minhash_signatures(df, id_col, text_col)
     ).localCheckpoint(eager=False)
@@ -330,7 +332,10 @@ def dedup_components(
     )
     nodes = edges.select(F.col("src").alias("id")).distinct()
     # self-loops: a node reads its OWN label through the same join that
-    # reads its neighbors' — one reference to `labels` per round
+    # reads its neighbors' — one reference to `labels` per round.
+    # Both checkpoints below are local-only: they assume no executor loss
+    # (the checkpoint lives on executors); a cluster run needs a reliable
+    # checkpoint() or exchange reuse instead
     edges2 = edges.unionByName(
         nodes.select(F.col("id").alias("src"), F.col("id").alias("dst"))
     ).localCheckpoint(eager=True)
@@ -342,6 +347,8 @@ def dedup_components(
         # its self-loop row (dst == src), so the convergence compare
         # needs no second join — the self-loop guarantees comp is
         # monotone non-increasing, so "changed" = comp < own_prev
+        # local-only: assumes no executor loss (the checkpoint lives on executors);
+        # a cluster run needs a reliable checkpoint() or exchange reuse instead
         new_labels = (
             edges2.join(labels, edges2["dst"] == labels["id"])
             .groupBy("src")
@@ -397,6 +404,8 @@ def dedup_components_star(
     raises if max_iters rounds don't reach it.
     """
     u, v = F.col("u"), F.col("v")
+    # local-only: assumes no executor loss (the checkpoint lives on executors);
+    # a cluster run needs a reliable checkpoint() or exchange reuse instead
     base = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .distinct()
@@ -439,6 +448,8 @@ def dedup_components_star(
 
     converged = False
     for _ in range(max_iters):
+        # local-only: assumes no executor loss (the checkpoint lives on executors);
+        # a cluster run needs a reliable checkpoint() or exchange reuse instead
         nxt = small_star(large_star(e)).localCheckpoint(eager=True)
         ca, cb = canon(e), canon(nxt)
         diff = (

@@ -33,9 +33,7 @@ real reference semantics.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -51,6 +49,7 @@ from openocr_spark.operators.layout import (
     score_filter,
     untokenize,
 )
+from openocr_spark.rowmap import map_rows
 
 _WORDS = "alpha beta gamma delta sigma lambda theta omega".split()
 
@@ -132,25 +131,17 @@ def postprocess_block_text(
 
 
 def _recognize_kernel(max_gen_length: int):
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = []
-            for doc_id, block_id, task, ftoks, fmds in zip(
-                pdf["doc_id"], pdf["block_id"], pdf["task"],
-                pdf["fig_tokens"], pdf["fig_mds"],
-            ):
-                ftoks = [t for t in ftoks if t is not None] if ftoks is not None else None
-                fmds = [m for m in fmds if m is not None] if fmds is not None else None
-                raw = surrogate_block_text(
-                    doc_id, block_id, task, ftoks, max_gen_length
-                )
-                post = postprocess_block_text(raw, task, block_id, ftoks, fmds)
-                # image-kind / imgless blocks carry empty text in
-                # recognition_results (infer_doc_onnx.py:988-1007)
-                texts.append("" if post is None else post)
-            out = pdf.drop(columns=["fig_tokens", "fig_mds"])
-            out["text"] = texts
-            yield out
+    def kernel(row):
+        ftoks, fmds = row["fig_tokens"], row["fig_mds"]
+        ftoks = [t for t in ftoks if t is not None] if ftoks is not None else None
+        fmds = [m for m in fmds if m is not None] if fmds is not None else None
+        raw = surrogate_block_text(
+            row["doc_id"], row["block_id"], row["task"], ftoks, max_gen_length
+        )
+        post = postprocess_block_text(raw, row["task"], row["block_id"], ftoks, fmds)
+        # image-kind / imgless blocks carry empty text in
+        # recognition_results (infer_doc_onnx.py:988-1007)
+        yield {**row, "text": "" if post is None else post}
 
     return kernel
 
@@ -207,7 +198,7 @@ def doc_parse(
         "reading_order int, bbox array<double>, custom_value double, "
         "has_img boolean, text string"
     )
-    return staged.mapInPandas(_recognize_kernel(max_gen_length), schema=schema)
+    return map_rows(staged, _recognize_kernel(max_gen_length), schema)
 
 
 def doc_spans(parsed: DataFrame) -> DataFrame:

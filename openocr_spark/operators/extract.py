@@ -175,34 +175,44 @@ REC_HEAD_NAMES: tuple[str, ...] = (
 )
 
 
-def _process_media_arrays(
-    prob: np.ndarray, regions: list[dict], cfg: ExtractConfig, decode=None
-) -> str:
-    """Per-media kernel flow: detect → reading order → recognize → filter
-    → newline-join (infer_e2e.py:155-218 infer_single_image analog).
-    `decode` is the resolved decode-head kernel — the batch kernel
-    resolves it ONCE at closure-build time (driver side, so a bad
-    cfg.rec_head fails before any job launches, and the hot loop skips
-    168k dispatch lookups); None resolves here for direct callers."""
-    if decode is None:
-        decode = _decode_fn(cfg.rec_head, cfg.token_map)
-    boxes, _scores = detect_boxes(
+def _read_media(prob: np.ndarray, regions: list[dict], cfg: ExtractConfig, decode):
+    """Per-media kernel flow: detect → reading order → assign → recognize
+    (infer_e2e.py:155-218 infer_single_image analog). Yields
+    (box, det_score, ridx, text, rec_score) per detected box in reading
+    order; a box with no assigned GT region has ridx -1, text "" and
+    rec_score 0.0. `decode` is the resolved decode-head kernel."""
+    boxes, scores = detect_boxes(
         prob,
         thresh=cfg.binarize_thresh,
         box_thresh=cfg.box_thresh,
         min_size=cfg.min_size,
         unclip_ratio=cfg.unclip_ratio,
     )
-    boxes = sorted_boxes(boxes, line_tol=cfg.line_tol)
+    score_of = {id(b): s for b, s in zip(boxes, scores)}
+    order = sorted_boxes(boxes, line_tol=cfg.line_tol)
     pts = [np.asarray(r["points"]) for r in regions]
-    texts = []
-    for box, ridx in zip(boxes, assign_regions_to_boxes(boxes, pts)):
-        if ridx < 0:
-            continue
-        text, score = decode(regions[ridx]["logits"])
-        if score >= cfg.drop_score or cfg.rec_head in NO_CONF_HEADS:
-            texts.append(text)
-    return "\n".join(texts)
+    for box, ridx in zip(order, assign_regions_to_boxes(order, pts)):
+        text, score = decode(regions[ridx]["logits"]) if ridx >= 0 else ("", 0.0)
+        yield box, score_of[id(box)], ridx, text, score
+
+
+def _process_media_arrays(
+    prob: np.ndarray, regions: list[dict], cfg: ExtractConfig, decode=None
+) -> str:
+    """One media's text: `_read_media`'s recognized regions, filtered by
+    drop_score (heads that emit no confidence are exempt), newline-joined.
+    `decode` is the resolved decode-head kernel — the batch kernel
+    resolves it ONCE at closure-build time (driver side, so a bad
+    cfg.rec_head fails before any job launches, and the hot loop skips
+    168k dispatch lookups); None resolves here for direct callers."""
+    if decode is None:
+        decode = _decode_fn(cfg.rec_head, cfg.token_map)
+    keep_all = cfg.rec_head in NO_CONF_HEADS
+    return "\n".join(
+        text
+        for _box, _det, ridx, text, score in _read_media(prob, regions, cfg, decode)
+        if ridx >= 0 and (keep_all or score >= cfg.drop_score)
+    )
 
 
 def _prob_from_buffer(buf, h: int, w: int) -> np.ndarray:

@@ -9,19 +9,19 @@ media span is deterministically inserted when md5(doc_id#i) lands in a
 media_ref seeds the synthetic payload generator, so the full
 detect+recognize path runs with zero external data.
 
-Runs as a vectorized mapInPandas pass (ingestion is one linear scan at
-any scale; the generator is executor-side, nothing crosses the driver).
+Runs as one row-kernel pass over Arrow batches (ingestion is one linear
+scan at any scale; the generator is executor-side, nothing crosses the
+driver).
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from openocr_spark import schemas
+from openocr_spark.rowmap import map_rows
 
 
 def _spans_for_text(doc_id: str, text: str) -> list[dict]:
@@ -57,16 +57,8 @@ def interleave(flat_docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
         spark.sparkContext.defaultParallelism
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype(str),
-                    "spans": [
-                        _spans_for_text(str(d), t if isinstance(t, str) else "")
-                        for d, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
+    def gen(row):
+        d, t = str(row[id_col]), row[text_col]
+        yield {"doc_id": d, "spans": _spans_for_text(d, t if isinstance(t, str) else "")}
 
-    return cols.mapInPandas(gen, schema=schemas.DOCUMENTS)
+    return map_rows(cols, gen, schemas.DOCUMENTS)

@@ -3,7 +3,7 @@
 DetMetric (SURVEY §2.4 A4, §2.3 J2/J3): ICDAR IoU>0.5 protocol —
 per-image greedy 1:1 matching of predicted vs GT boxes with don't-care
 exclusion (opendet/metrics/eval_det_iou.py:16-185, det_metric.py:24-74),
-expressed as: grouped pandas UDF per media for the greedy N×M matching,
+expressed as: one row kernel per media for the greedy N×M matching,
 then textbook partial→final aggregation for precision/recall/hmean.
 
 RecMetric (A5/A6): exact-match accuracy + 1−normalized edit distance
@@ -14,13 +14,14 @@ histograms.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pandas as pd  # cmer_metric's pandas_udf resolves its type hints here
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from openocr_spark import schemas
 from openocr_spark.config import DEFAULT_CONFIG, ExtractConfig
 from openocr_spark.functions.exprs import normalized_levenshtein
+from openocr_spark.rowmap import map_rows
 
 
 from openocr_spark.kernels.geometry import (  # noqa: E402
@@ -78,8 +79,7 @@ def _inter_over_area(pred: np.ndarray, dc: np.ndarray) -> float:
 
 
 def _quad(points) -> np.ndarray:
-    # Arrow hands nested arrays to pandas as object-dtype ndarrays of
-    # ndarrays; build the (N,2) array explicitly
+    # nested point lists (or rows of an ndarray) → one float (N,2) array
     return np.array([[float(p[0]), float(p[1])] for p in points])
 
 
@@ -90,6 +90,29 @@ def _pts_key(points) -> tuple:
     every list is sorted before the greedy loop (explicit gt_idx/det_idx
     when the caller provides one, this content key otherwise)."""
     return tuple(tuple(float(v) for v in p) for p in points)
+
+
+def _gt_split(g_list, has_gt_idx: bool) -> tuple[list, list]:
+    """One media's GT list → (care quads, don't-care quads), in gt_idx
+    order when the caller provides one, content order otherwise."""
+    g_recs = sorted(
+        g_list or [],
+        key=(lambda r: r["gt_idx"]) if has_gt_idx else (lambda r: _pts_key(r["points"])),
+    )
+    gts = [(_quad(r["points"]), bool(r["ignore"])) for r in g_recs]
+    return [q for q, ig in gts if not ig], [q for q, ig in gts if ig]
+
+
+def _greedy_match(gt_care: list, det_care: list) -> set[int]:
+    """Indices of det_care matched 1:1 to gt_care: each GT in order takes
+    the first unused detection with IoU > 0.5 (eval_det_iou.py:117-142)."""
+    used: set[int] = set()
+    for gr in gt_care:
+        for di, dr in enumerate(det_care):
+            if di not in used and _iou(gr, dr) > 0.5:
+                used.add(di)
+                break
+    return used
 
 
 def det_partials(pred: DataFrame, gt: DataFrame) -> DataFrame:
@@ -129,54 +152,27 @@ def det_partials(pred: DataFrame, gt: DataFrame) -> DataFrame:
         "media_ref string, n_gt_care long, n_det_care long, n_matched long"
     )
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for ref, p_list, g_list in zip(
-                pdf["media_ref"], pdf["p_list"], pdf["g_list"]
-            ):
-                p_recs = list(p_list) if p_list is not None else []
-                if has_det_idx:
-                    p_recs.sort(key=lambda r: int(r["det_idx"]))
-                else:
-                    p_recs.sort(key=lambda r: _pts_key(r["points"]))
-                preds = [_quad(r["points"]) for r in p_recs]
-                g_recs = list(g_list) if g_list is not None else []
-                if has_gt_idx:
-                    g_recs.sort(key=lambda r: int(r["gt_idx"]))
-                else:
-                    g_recs.sort(key=lambda r: _pts_key(r["points"]))
-                gts = [(_quad(r["points"]), bool(r["ignore"])) for r in g_recs]
-                gt_care = [r for r, ig in gts if not ig]
-                gt_dc = [r for r, ig in gts if ig]
-                det_care = []
-                for pr in preds:
-                    if not any(_inter_over_area(pr, dc) > 0.5 for dc in gt_dc):
-                        det_care.append(pr)
-                matched = 0
-                used_det: set[int] = set()
-                for gr in gt_care:
-                    for di, dr in enumerate(det_care):
-                        if di in used_det:
-                            continue
-                        if _iou(gr, dr) > 0.5:
-                            used_det.add(di)
-                            matched += 1
-                            break
-                rows.append(
-                    {
-                        "media_ref": ref,
-                        "n_gt_care": len(gt_care),
-                        "n_det_care": len(det_care),
-                        "n_matched": matched,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "n_gt_care", "n_det_care", "n_matched"],
-            )
+    def fn(row):
+        p_recs = list(row["p_list"] or [])
+        if has_det_idx:
+            p_recs.sort(key=lambda r: r["det_idx"])
+        else:
+            p_recs.sort(key=lambda r: _pts_key(r["points"]))
+        preds = [_quad(r["points"]) for r in p_recs]
+        gt_care, gt_dc = _gt_split(row["g_list"], has_gt_idx)
+        det_care = [
+            pr for pr in preds
+            if not any(_inter_over_area(pr, dc) > 0.5 for dc in gt_dc)
+        ]
+        matched = _greedy_match(gt_care, det_care)
+        yield {
+            "media_ref": row["media_ref"],
+            "n_gt_care": len(gt_care),
+            "n_det_care": len(det_care),
+            "n_matched": len(matched),
+        }
 
-    return both.mapInPandas(fn, schema=out_schema)
+    return map_rows(both, fn, out_schema)
 
 
 def det_match_flags(pred: DataFrame, gt: DataFrame) -> DataFrame:
@@ -201,58 +197,29 @@ def det_match_flags(pred: DataFrame, gt: DataFrame) -> DataFrame:
     both = p.join(g, "media_ref", "full_outer")
     out_schema = "media_ref string, det_idx long, conf double, matched boolean"
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for ref, p_list, g_list in zip(
-                pdf["media_ref"], pdf["p_list"], pdf["g_list"]
-            ):
-                preds = (
-                    sorted(
-                        (
-                            (int(r["det_idx"]), _quad(r["points"]), float(r["conf"]))
-                            for r in p_list
-                        ),
-                        key=lambda t: t[0],
-                    )
-                    if p_list is not None
-                    else []
-                )
-                g_recs = list(g_list) if g_list is not None else []
-                if has_gt_idx:
-                    g_recs.sort(key=lambda r: int(r["gt_idx"]))
-                else:
-                    g_recs.sort(key=lambda r: _pts_key(r["points"]))
-                gts = [(_quad(r["points"]), bool(r["ignore"])) for r in g_recs]
-                gt_care = [r for r, ig in gts if not ig]
-                gt_dc = [r for r, ig in gts if ig]
-                det_care = []
-                for idx, pr, conf in preds:
-                    if any(_inter_over_area(pr, dc) > 0.5 for dc in gt_dc):
-                        continue
-                    det_care.append((idx, pr, conf))
-                matched_idx: set[int] = set()
-                for gr in gt_care:
-                    for di, (idx, dr, _c) in enumerate(det_care):
-                        if di in matched_idx:
-                            continue
-                        if _iou(gr, dr) > 0.5:
-                            matched_idx.add(di)
-                            break
-                for di, (idx, _dr, conf) in enumerate(det_care):
-                    rows.append(
-                        {
-                            "media_ref": ref,
-                            "det_idx": idx,
-                            "conf": conf,
-                            "matched": di in matched_idx,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "det_idx", "conf", "matched"]
-            )
+    def fn(row):
+        preds = sorted(
+            (
+                (r["det_idx"], _quad(r["points"]), float(r["conf"]))
+                for r in row["p_list"] or []
+            ),
+            key=lambda t: t[0],
+        )
+        gt_care, gt_dc = _gt_split(row["g_list"], has_gt_idx)
+        det_care = [
+            (idx, pr, conf) for idx, pr, conf in preds
+            if not any(_inter_over_area(pr, dc) > 0.5 for dc in gt_dc)
+        ]
+        matched = _greedy_match(gt_care, [pr for _i, pr, _c in det_care])
+        for di, (idx, _pr, conf) in enumerate(det_care):
+            yield {
+                "media_ref": row["media_ref"],
+                "det_idx": idx,
+                "conf": conf,
+                "matched": di in matched,
+            }
 
-    return both.mapInPandas(fn, schema=out_schema)
+    return map_rows(both, fn, out_schema)
 
 
 def det_ap(pred: DataFrame, gt: DataFrame) -> DataFrame:
@@ -360,8 +327,6 @@ def cmer_metric(
     Arrow-batched pandas UDF (functions/seqeval — pure per-row work, no
     shuffle); the edit distance stays JVM-side via F.levenshtein.
     Empty input averages to all-zeros like the reference (:308-315)."""
-    import pandas as pd
-
     from pyspark.sql.functions import pandas_udf
 
     from openocr_spark.functions.seqeval import cmer_pair_scores
@@ -620,57 +585,28 @@ def extract_detail(
     payloads — the system_results.txt row shape
     (infer_e2e.py:272-276). Input: df with a media_ref column."""
     from openocr_spark.fixtures import payload_for_media_ref
-    from openocr_spark.kernels.detection import (
-        assign_regions_to_boxes,
-        detect_boxes,
-        sorted_boxes,
-    )
-    from openocr_spark.kernels.recognition import ctc_greedy_decode
+    from openocr_spark.operators.extract import _decode_fn, _read_media
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"].tolist():
-                p = payload_for_media_ref(ref)
-                boxes, scores = detect_boxes(
-                    p["score_map"],
-                    thresh=cfg.binarize_thresh,
-                    box_thresh=cfg.box_thresh,
-                    min_size=cfg.min_size,
-                    unclip_ratio=cfg.unclip_ratio,
-                )
-                order = sorted_boxes(boxes, line_tol=cfg.line_tol)
-                score_of = {id(b): s for b, s in zip(boxes, scores)}
-                pts = [np.asarray(r["points"]) for r in p["regions"]]
-                for idx, (box, ridx) in enumerate(
-                    zip(order, assign_regions_to_boxes(order, pts))
-                ):
-                    text, rscore, gt_text = ("", 0.0, None)
-                    if ridx >= 0:
-                        text, rscore = ctc_greedy_decode(p["regions"][ridx]["logits"])
-                        gt_text = p["regions"][ridx]["gt_text"]
-                    rows.append(
-                        {
-                            "media_ref": ref,
-                            "region_idx": idx,
-                            "points": [[int(x), int(y)] for x, y in box],
-                            "det_score": float(score_of.get(id(box), 0.0)),
-                            "transcription": text,
-                            "rec_score": float(rscore),
-                            "gt_text": gt_text,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_ref", "region_idx", "points",
-                    "det_score", "transcription", "rec_score", "gt_text",
-                ],
-            )
+    decode = _decode_fn(cfg.rec_head, cfg.token_map)  # driver-side fail-fast
 
-    return media_refs.select("media_ref").mapInPandas(
-        kernel, schema=schemas.DET_REC_DETAIL
-    )
+    def kernel(row):
+        ref = row["media_ref"]
+        p = payload_for_media_ref(ref)
+        regions = p["regions"]
+        for idx, (box, det_score, ridx, text, rec_score) in enumerate(
+            _read_media(p["score_map"], regions, cfg, decode)
+        ):
+            yield {
+                "media_ref": ref,
+                "region_idx": idx,
+                "points": [[int(x), int(y)] for x, y in box],
+                "det_score": float(det_score),
+                "transcription": text,
+                "rec_score": float(rec_score),
+                "gt_text": regions[ridx]["gt_text"] if ridx >= 0 else None,
+            }
+
+    return map_rows(media_refs.select("media_ref"), kernel, schemas.DET_REC_DETAIL)
 
 
 def latency_profile(
@@ -687,29 +623,24 @@ def latency_profile(
     import time
 
     from openocr_spark.fixtures import payload_for_media_ref
-    from openocr_spark.operators.extract import _process_media_arrays
+    from openocr_spark.operators.extract import _decode_fn, _process_media_arrays
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"].tolist():
-                p = payload_for_media_ref(ref)
-                t0 = time.perf_counter_ns()
-                _process_media_arrays(p["score_map"], p["regions"], cfg)
-                dt = (time.perf_counter_ns() - t0) // 1000
-                rows.append(
-                    {
-                        "media_ref": ref,
-                        "n_regions": len(p["regions"]),
-                        "elapsed_us": int(dt),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "n_regions", "elapsed_us"]
-            )
+    decode = _decode_fn(cfg.rec_head, cfg.token_map)
 
-    detail = media_refs.select("media_ref").mapInPandas(
-        kernel, schema="media_ref string, n_regions int, elapsed_us long"
+    def kernel(row):
+        p = payload_for_media_ref(row["media_ref"])
+        t0 = time.perf_counter_ns()
+        _process_media_arrays(p["score_map"], p["regions"], cfg, decode)
+        yield {
+            "media_ref": row["media_ref"],
+            "n_regions": len(p["regions"]),
+            "elapsed_us": (time.perf_counter_ns() - t0) // 1000,
+        }
+
+    detail = map_rows(
+        media_refs.select("media_ref"),
+        kernel,
+        "media_ref string, n_regions int, elapsed_us long",
     )
     return detail.groupBy("n_regions").agg(
         F.count("*").alias("n_media"),
@@ -739,34 +670,25 @@ def rec_heads_matrix(media_refs: DataFrame) -> DataFrame:
     # resolved once at closure-build time (driver side) — the same
     # fail-fast discipline as the extract kernels
     heads = {name: _decode_fn(name, tm) for name in REC_HEAD_NAMES}
-    cols = ["media_ref", "region_idx", "head", "text", "conf"]
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"].tolist():
-                p = payload_for_media_ref(ref)
-                for ridx, reg in enumerate(p["regions"]):
-                    lg = np.asarray(reg["logits"], dtype=np.float64)
-                    res = {name: fn(lg) for name, fn in heads.items()}
-                    for head, (text, conf) in res.items():
-                        rows.append(
-                            {
-                                "media_ref": ref,
-                                "region_idx": ridx,
-                                "head": head,
-                                "text": text,
-                                "conf": round(float(conf), 6),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=cols)
+    def kernel(row):
+        ref = row["media_ref"]
+        for ridx, reg in enumerate(payload_for_media_ref(ref)["regions"]):
+            lg = np.asarray(reg["logits"], dtype=np.float64)
+            for head, fn in heads.items():
+                text, conf = fn(lg)
+                yield {
+                    "media_ref": ref,
+                    "region_idx": ridx,
+                    "head": head,
+                    "text": text,
+                    "conf": round(float(conf), 6),
+                }
 
-    return media_refs.select("media_ref").mapInPandas(
+    return map_rows(
+        media_refs.select("media_ref"),
         kernel,
-        schema=(
-            "media_ref string, region_idx int, head string, "
-            "text string, conf double"
-        ),
+        "media_ref string, region_idx int, head string, text string, conf double",
     )
 
 
@@ -777,27 +699,20 @@ def gt_regions(media_refs: DataFrame) -> DataFrame:
     iterates GT boxes in) so the greedy matcher is deterministic."""
     from openocr_spark.fixtures import payload_for_media_ref
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"].tolist():
-                for gi, r in enumerate(payload_for_media_ref(ref)["regions"]):
-                    rows.append(
-                        {
-                            "media_ref": ref,
-                            "gt_idx": gi,
-                            "points": r["points"],
-                            "ignore": r["ignore"],
-                            "gt_text": r["gt_text"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "gt_idx", "points", "ignore", "gt_text"],
-            )
+    def kernel(row):
+        ref = row["media_ref"]
+        for gi, r in enumerate(payload_for_media_ref(ref)["regions"]):
+            yield {
+                "media_ref": ref,
+                "gt_idx": gi,
+                "points": r["points"],
+                "ignore": r["ignore"],
+                "gt_text": r["gt_text"],
+            }
 
-    schema = (
+    return map_rows(
+        media_refs.select("media_ref"),
+        kernel,
         "media_ref string, gt_idx int, points array<array<int>>, "
-        "ignore boolean, gt_text string"
+        "ignore boolean, gt_text string",
     )
-    return media_refs.select("media_ref").mapInPandas(kernel, schema=schema)

@@ -1,7 +1,7 @@
 """Audio/video multimodal operators — the non-image legs of the
 opaque-binary-column model (brief: image/audio/video as `binary`
 columns with typed metadata; decode / feature-extract / frame-sample
-as vectorized kernels over mapInPandas).
+as row kernels over Arrow batches).
 
 Both operators follow decode_media's plan shape: embarrassingly
 parallel per payload, no shuffle (the input partitioning carries
@@ -12,11 +12,10 @@ same argument as the media decode path.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from openocr_spark.rowmap import map_rows
 
 AUDIO_SCHEMA = (
     "media_ref string, sample_rate int, n_channels int, n_samples long, "
@@ -37,37 +36,22 @@ def audio_stats(
     shards)."""
     from openocr_spark.kernels.riff_media import decode_wav
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf[ref_col], pdf[payload_col]):
-                samples, rate = decode_wav(bytes(payload))
-                n = samples.shape[0]
-                rows.append(
-                    {
-                        "media_ref": ref,
-                        "sample_rate": rate,
-                        "n_channels": samples.shape[1],
-                        "n_samples": n,
-                        "duration_ms": round(n * 1000.0 / rate, 6),
-                        "rms": round(
-                            float(np.sqrt(np.mean(np.square(samples))))
-                            if n
-                            else 0.0,
-                            6,
-                        ),
-                        "peak": round(
-                            float(np.max(np.abs(samples))) if n else 0.0, 6
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[c.split()[0] for c in AUDIO_SCHEMA.split(", ")]
-            )
+    def kernel(row):
+        samples, rate = decode_wav(row[payload_col])
+        n = samples.shape[0]
+        yield {
+            "media_ref": row[ref_col],
+            "sample_rate": rate,
+            "n_channels": samples.shape[1],
+            "n_samples": n,
+            "duration_ms": round(n * 1000.0 / rate, 6),
+            "rms": round(
+                float(np.sqrt(np.mean(np.square(samples)))) if n else 0.0, 6
+            ),
+            "peak": round(float(np.max(np.abs(samples))) if n else 0.0, 6),
+        }
 
-    return df.select(ref_col, payload_col).mapInPandas(
-        kernel, schema=AUDIO_SCHEMA
-    )
+    return map_rows(df.select(ref_col, payload_col), kernel, AUDIO_SCHEMA)
 
 
 def video_frame_sample(
@@ -84,27 +68,14 @@ def video_frame_sample(
     excluded by the kernel — see decode_avi_frames)."""
     from openocr_spark.kernels.riff_media import decode_avi_frames
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf[ref_col], pdf[payload_col]):
-                for k, px in enumerate(
-                    decode_avi_frames(bytes(payload), every_n)
-                ):
-                    rows.append(
-                        {
-                            "media_ref": ref,
-                            "frame_idx": k * every_n,
-                            "height": px.shape[0],
-                            "width": px.shape[1],
-                            "mean_px": round(float(px.mean()), 6),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[c.split()[0] for c in VIDEO_FRAME_SCHEMA.split(", ")],
-            )
+    def kernel(row):
+        for k, px in enumerate(decode_avi_frames(row[payload_col], every_n)):
+            yield {
+                "media_ref": row[ref_col],
+                "frame_idx": k * every_n,
+                "height": px.shape[0],
+                "width": px.shape[1],
+                "mean_px": round(float(px.mean()), 6),
+            }
 
-    return df.select(ref_col, payload_col).mapInPandas(
-        kernel, schema=VIDEO_FRAME_SCHEMA
-    )
+    return map_rows(df.select(ref_col, payload_col), kernel, VIDEO_FRAME_SCHEMA)

@@ -1,5 +1,5 @@
 """Media preprocessing / training-target generation as a Spark stage
-(SURVEY G7/G8/G11/G15/G16-17 plumbing): one mapInPandas pass per media
+(SURVEY G7/G8/G11/G15/G16-17 plumbing): one row-kernel pass per media
 payload runs the pixel kernels (kernels/preprocess.py) and emits the
 shapes/ratios/target statistics a training-data pipeline materializes.
 
@@ -13,11 +13,10 @@ next to the stats.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from openocr_spark.rowmap import map_rows
 
 PREPROC_SCHEMA = (
     "media_ref string, h int, w int, resized_h int, resized_w int, "
@@ -51,64 +50,55 @@ def det_training_targets(
         make_shrink_map,
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # resize shapes depend only on (h, w) — cache per media shape
-        # across the whole partition (the RatioDataSet same-shape
-        # bucketing idea)
-        det_shapes: dict[tuple[int, int], tuple] = {}
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"].tolist():
-                # logits skipped: this job consumes geometry + score
-                # maps only; logit synthesis was ~45% of payload cost
-                p = payload_for_media_ref(ref, with_logits=False)
-                prob = p["score_map"]
-                h, w = prob.shape
-                shape = (h, w)
-                if shape not in det_shapes:
-                    # incl. DetResizeForTest's tiny-input pre-pad —
-                    # ratios are resize/PADDED dims (fixture_oracle
-                    # lockstep; pinned in test_preprocess_differential)
-                    det_shapes[shape] = det_stats_shapes(
-                        h, w, limit_side_len, limit_type, rec_h, rec_w
-                    )
-                ph, pw, rh, rw, nw = det_shapes[shape]
-                rects = [
-                    (
-                        float(r["points"][0][0]), float(r["points"][0][1]),
-                        float(r["points"][2][0]), float(r["points"][2][1]),
-                    )
-                    for r in p["regions"]
-                ]
-                ignore = [bool(r["ignore"]) for r in p["regions"]]
-                gt, mask = make_shrink_map(rects, ignore, h, w)
-                border, bmask = make_border_map(rects, ignore, h, w)
-                page = ((1.0 - prob) * 255.0).astype(np.uint8)  # ink-on-paper
-                cropped = crop_margin(page)
-                valid = nw / float(rec_w)  # G16/G17 keep-ratio pad share
-                rows.append(
-                    {
-                        "media_ref": ref,
-                        "h": h, "w": w,
-                        "resized_h": rh,
-                        "resized_w": rw,
-                        "ratio_h": round(rh / float(ph), 6),
-                        "ratio_w": round(rw / float(pw), 6),
-                        "shrink_pos": int((gt == 1.0).sum()),
-                        "mask_zero": int((mask == 0.0).sum()),
-                        "border_mask_pos": int((bmask == 1.0).sum()),
-                        # rounded to 2 decimals: the oracle rasterizes
-                        # with a different (regional) distance formula,
-                        # equal up to float32 ulps
-                        "border_sum": round(float(border.sum()), 2),
-                        "crop_h": cropped.shape[0],
-                        "crop_w": cropped.shape[1],
-                        "pad_valid_ratio": round(valid, 6),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[c.split()[0] for c in PREPROC_SCHEMA.split(", ")],
-            )
+    # resize shapes depend only on (h, w) — cache per media shape
+    # across the task (the RatioDataSet same-shape bucketing idea)
+    det_shapes: dict[tuple[int, int], tuple] = {}
 
-    return media_refs.select("media_ref").mapInPandas(kernel, schema=PREPROC_SCHEMA)
+    def kernel(row):
+        ref = row["media_ref"]
+        # logits skipped: this job consumes geometry + score maps only;
+        # logit synthesis was ~45% of payload cost
+        p = payload_for_media_ref(ref, with_logits=False)
+        prob = p["score_map"]
+        h, w = prob.shape
+        if (h, w) not in det_shapes:
+            # incl. DetResizeForTest's tiny-input pre-pad — ratios are
+            # resize/PADDED dims (fixture_oracle lockstep; pinned in
+            # test_preprocess_differential)
+            det_shapes[h, w] = det_stats_shapes(
+                h, w, limit_side_len, limit_type, rec_h, rec_w
+            )
+        ph, pw, rh, rw, nw = det_shapes[h, w]
+        rects = [
+            (
+                float(r["points"][0][0]), float(r["points"][0][1]),
+                float(r["points"][2][0]), float(r["points"][2][1]),
+            )
+            for r in p["regions"]
+        ]
+        ignore = [bool(r["ignore"]) for r in p["regions"]]
+        gt, mask = make_shrink_map(rects, ignore, h, w)
+        border, bmask = make_border_map(rects, ignore, h, w)
+        page = ((1.0 - prob) * 255.0).astype(np.uint8)  # ink-on-paper
+        cropped = crop_margin(page)
+        valid = nw / float(rec_w)  # G16/G17 keep-ratio pad share
+        yield {
+            "media_ref": ref,
+            "h": h, "w": w,
+            "resized_h": rh,
+            "resized_w": rw,
+            "ratio_h": round(rh / float(ph), 6),
+            "ratio_w": round(rw / float(pw), 6),
+            "shrink_pos": int((gt == 1.0).sum()),
+            "mask_zero": int((mask == 0.0).sum()),
+            "border_mask_pos": int((bmask == 1.0).sum()),
+            # rounded to 2 decimals: the oracle rasterizes with a
+            # different (regional) distance formula, equal up to
+            # float32 ulps
+            "border_sum": round(float(border.sum()), 2),
+            "crop_h": cropped.shape[0],
+            "crop_w": cropped.shape[1],
+            "pad_valid_ratio": round(valid, 6),
+        }
+
+    return map_rows(media_refs.select("media_ref"), kernel, PREPROC_SCHEMA)

@@ -416,6 +416,8 @@ def near_dup_pairs_lsh(
     # candidate self-join — without it the whole hash lineage runs
     # twice (the same reasoning as lsh_candidate_pairs); the
     # materialized relation is bands·n tiny rows
+    # local-only: assumes no executor loss (the checkpoint lives on executors);
+    # a cluster run needs a reliable checkpoint() or exchange reuse instead
     tagged = projected.select("id", band_arr.alias("bs")).select(
         "id", F.explode("bs").alias("b")
     ).select("id", "b.band", "b.bucket").localCheckpoint(eager=False)

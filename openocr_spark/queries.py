@@ -1833,81 +1833,51 @@ def q_decode_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     independent test-side encoders; this query puts the lossless paths
     inside the driver's correctness window.)"""
     import numpy as np
-    import pandas as pd
 
-    from openocr_spark.kernels.media_decode import decode_media
+    from openocr_spark.kernels.media_decode import decode_media, encode_png
+    from openocr_spark.kernels.pdf_format import encode_pdf
+    from openocr_spark.kernels.tiff_format import encode_tiff_pages
+    from openocr_spark.kernels.webp_format import encode_webp_gray
+    from openocr_spark.rowmap import map_rows
 
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def gen(batches):
-        from openocr_spark.kernels.media_decode import encode_png
-        from openocr_spark.kernels.pdf_format import encode_pdf
-        from openocr_spark.kernels.tiff_format import encode_tiff_pages
-        from openocr_spark.kernels.webp_format import encode_webp_gray
+    def img(seed: int, h: int, w: int) -> np.ndarray:
+        y, x = np.mgrid[0:h, 0:w]
+        return ((x + 3 * y + seed) % 256).astype(np.uint8)
 
-        def img(seed: int, h: int, w: int) -> np.ndarray:
-            y, x = np.mgrid[0:h, 0:w]
-            return ((x + 3 * y + seed) % 256).astype(np.uint8)
+    def gen(row):
+        s = int(row["doc_id"])
+        h, w = 8 + s % 5, 12 + s % 7
+        m = s % 4
+        if m == 0:
+            content = encode_png(img(s, h, w))
+        elif m == 1:
+            content = encode_pdf([img(s, h, w), img(s + 1000, h, w)])
+        elif m == 2:
+            content = encode_tiff_pages(img(s, h, w), img(s + 1000, h, w) > 127)
+        else:
+            content = encode_webp_gray(img(s, h, w))
+        yield {"doc_id": str(s), "media_ref": f"m{s}", "content": content}
 
-        for pdf in batches:
-            rows = []
-            for s in pdf["doc_id"]:
-                s = int(s)
-                h, w = 8 + s % 5, 12 + s % 7
-                m = s % 4
-                if m == 0:
-                    content = encode_png(img(s, h, w))
-                elif m == 1:
-                    content = encode_pdf([img(s, h, w), img(s + 1000, h, w)])
-                elif m == 2:
-                    content = encode_tiff_pages(
-                        img(s, h, w), img(s + 1000, h, w) > 127
-                    )
-                else:
-                    content = encode_webp_gray(img(s, h, w))
-                rows.append(
-                    {"doc_id": str(s), "media_ref": f"m{s}", "content": content}
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "media_ref", "content"]
-            )
+    media = map_rows(docs, gen, "doc_id string, media_ref string, content binary")
 
-    media = docs.mapInPandas(
-        gen, schema="doc_id string, media_ref string, content binary"
-    )
+    def sums(row):
+        px = np.frombuffer(row["pixels"], dtype=np.uint8)
+        yield {
+            "doc_id": int(row["doc_id"]),
+            "page_no": row["page_no"],
+            "height": row["height"],
+            "width": row["width"],
+            "pixel_sum": int(px.astype(np.int64).sum()),
+            "nonzero_px": int((px > 0).sum()),
+        }
 
-    def sums(batches):
-        for pdf in batches:
-            out = []
-            for doc_id, page_no, h, w, buf in zip(
-                pdf["doc_id"], pdf["page_no"], pdf["height"],
-                pdf["width"], pdf["pixels"],
-            ):
-                px = np.frombuffer(bytes(buf), dtype=np.uint8)
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "page_no": int(page_no),
-                        "height": int(h),
-                        "width": int(w),
-                        "pixel_sum": int(px.astype(np.int64).sum()),
-                        "nonzero_px": int((px > 0).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "page_no", "height", "width",
-                    "pixel_sum", "nonzero_px",
-                ],
-            )
-
-    checks = decode_media(media).mapInPandas(
+    checks = map_rows(
+        decode_media(media),
         sums,
-        schema=(
-            "doc_id long, page_no int, height int, width int, "
-            "pixel_sum long, nonzero_px long"
-        ),
+        "doc_id long, page_no int, height int, width int, "
+        "pixel_sum long, nonzero_px long",
     )
     return checks.select(
         "doc_id",
@@ -2035,7 +2005,7 @@ def q_extract_spans(spark: SparkSession, sf: str) -> DataFrame:
     assembly. Oracle: per-doc span-sequence content hashes (kind, text,
     media_ref, order) from the independent single-node extraction."""
     docs = interleave(load(spark, sf, "documents"))
-    # lineage includes the mapInPandas generator → persist the exploded
+    # lineage includes the ingest row kernel → persist the exploded
     # spans so the text and media branches don't re-run ingestion
     out = extract(docs, persist_spans=True)
     return out.select(

@@ -61,7 +61,7 @@ def get_spark(
             "spark.sql.warehouse.dir",
             os.path.join(os.environ.get("TMPDIR", "/tmp"), "openocr_warehouse"),
         )
-        # kernel batch size: bounds per-batch memory in mapInPandas kernels
+        # kernel batch size: bounds per-batch memory in mapInArrow kernels
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # payload tables carry ~60KB binary cells; the default 4096-row
         # columnar reader batch would reserve ~250MB per scan task

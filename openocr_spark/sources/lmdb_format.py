@@ -675,22 +675,16 @@ def read_lmdb_dataset(spark, root_dir: str):
     decode runs in executors — one task per shard, the same parallelism
     unit as the reference's per-env traversal.
     Output: (shard string, idx int, image binary, label string)."""
-    import pandas as pd
+    from openocr_spark.rowmap import map_rows
 
-    sdf = _walk_shards(spark, root_dir)
+    def kernel(row):
+        for idx, img, lab in read_lmdb_dataset_records(row["shard"]):
+            yield {"shard": row["shard"], "idx": idx, "image": img, "label": lab}
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for shard in pdf["shard"].tolist():
-                for idx, img, lab in read_lmdb_dataset_records(shard):
-                    rows.append(
-                        {"shard": shard, "idx": idx, "image": img, "label": lab}
-                    )
-            yield pd.DataFrame(rows, columns=["shard", "idx", "image", "label"])
-
-    return sdf.mapInPandas(
-        kernel, schema="shard string, idx int, image binary, label string"
+    return map_rows(
+        _walk_shards(spark, root_dir),
+        kernel,
+        "shard string, idx int, image binary, label string",
     )
 
 
@@ -715,16 +709,12 @@ def read_text_lmdb_dataset(spark, root_dir: str):
     dataset, emitting (shard, idx, label). Closes the dataset-registry
     key-scheme matrix: LMDBDataSet / STRLMDBDataSet / LMDBDataSetTest
     share the image+label scheme read_lmdb_dataset handles."""
-    import pandas as pd
+    from openocr_spark.rowmap import map_rows
 
-    sdf = _walk_shards(spark, root_dir)
+    def kernel(row):
+        for idx, lab in read_text_lmdb_dataset_records(row["shard"]):
+            yield {"shard": row["shard"], "idx": idx, "label": lab}
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for shard in pdf["shard"].tolist():
-                for i, lab in read_text_lmdb_dataset_records(shard):
-                    rows.append({"shard": shard, "idx": i, "label": lab})
-            yield pd.DataFrame(rows, columns=["shard", "idx", "label"])
-
-    return sdf.mapInPandas(kernel, schema="shard string, idx int, label string")
+    return map_rows(
+        _walk_shards(spark, root_dir), kernel, "shard string, idx int, label string"
+    )

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from openocr_spark.rowmap import map_rows
+
 
 def read_binary_files(spark: SparkSession, glob: str) -> DataFrame:
     """Sorted binary-file scan (S1): (path, modificationTime, length,
@@ -85,7 +87,7 @@ def read_webdataset(spark: SparkSession, glob: str) -> DataFrame:
 
     Plan: binaryFile scan of the shards (each shard = one input row →
     one task; shard-level parallelism, the WebDataset model) →
-    mapInPandas untars in-memory → one row per member
+    a row kernel untars in-memory → one row per member
     (shard, key, ext, data). Use `webdataset_samples` to pivot members
     into one row per sample."""
     import io
@@ -93,37 +95,31 @@ def read_webdataset(spark: SparkSession, glob: str) -> DataFrame:
 
     shards = spark.read.format("binaryFile").load(glob)
 
-    def untar(batches):
-        import pandas as pd
+    def untar(row):
+        with tarfile.open(fileobj=io.BytesIO(row["content"])) as tf:
+            for m in tf.getmembers():
+                if not m.isfile():
+                    continue
+                # WebDataset convention: the sample key is the member
+                # name up to the FIRST dot after the last '/', the
+                # extension everything after it — so compound
+                # extensions ('0001.input.png' → key '0001', ext
+                # 'input.png') group correctly; a dotless member is its
+                # own key with ext ''
+                dirname, _, base = m.name.rpartition("/")
+                stem, _, ext = base.partition(".")
+                key = (dirname + "/" + stem) if dirname else stem
+                yield {
+                    "shard": row["path"],
+                    "key": key,
+                    "ext": ext,
+                    "data": tf.extractfile(m).read(),
+                }
 
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                with tarfile.open(fileobj=io.BytesIO(bytes(content))) as tf:
-                    for m in tf.getmembers():
-                        if not m.isfile():
-                            continue
-                        # WebDataset convention: the sample key is the
-                        # member name up to the FIRST dot after the last
-                        # '/', the extension everything after it — so
-                        # compound extensions ('0001.input.png' →
-                        # key '0001', ext 'input.png') group correctly;
-                        # a dotless member is its own key with ext ''
-                        dirname, _, base = m.name.rpartition("/")
-                        stem, dot, ext = base.partition(".")
-                        key = (dirname + "/" + stem) if dirname else stem
-                        rows.append(
-                            {
-                                "shard": path,
-                                "key": key,
-                                "ext": ext,
-                                "data": tf.extractfile(m).read(),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=["shard", "key", "ext", "data"])
-
-    return shards.select("path", "content").mapInPandas(
-        untar, schema="shard string, key string, ext string, data binary"
+    return map_rows(
+        shards.select("path", "content"),
+        untar,
+        "shard string, key string, ext string, data binary",
     )
 
 

@@ -156,6 +156,36 @@ def test_fixture_rec_eval(spark, fixture_refs):
     assert m["one_minus_ned"] == 1.0
 
 
+def test_extract_detail_decodes_with_configured_head(spark, fixture_refs):
+    """extract_detail honours cfg.rec_head like extract does: each row
+    assigned to a GT region carries the configured head's decode of that
+    region's logits, and on this fixture some of those differ from CTC."""
+    from openocr_spark.config import ExtractConfig
+    from openocr_spark.fixtures import payload_for_media_ref
+    from openocr_spark.kernels.detection import assign_regions_to_boxes
+    from openocr_spark.operators.extract import _decode_fn
+
+    head = "abinet"
+    decode, ctc = _decode_fn(head), _decode_fn("ctc")
+    rows = extract_detail(fixture_refs, ExtractConfig(rec_head=head)).collect()
+    n_assigned = n_differ = 0
+    for r in rows:
+        regions = payload_for_media_ref(r["media_ref"])["regions"]
+        (ridx,) = assign_regions_to_boxes(
+            [np.asarray(r["points"])], [np.asarray(g["points"]) for g in regions]
+        )
+        if ridx < 0:
+            assert (r["transcription"], r["gt_text"]) == ("", None)
+            continue
+        n_assigned += 1
+        text, score = decode(regions[ridx]["logits"])
+        assert r["transcription"] == text
+        assert r["rec_score"] == pytest.approx(float(score))
+        assert r["gt_text"] == regions[ridx]["gt_text"]
+        n_differ += text != ctc(regions[ridx]["logits"])[0]
+    assert n_assigned > 0 and n_differ > 0
+
+
 def test_latency_profile_shape_and_positive(spark):
     """A10: per-region-count kernel latency percentiles — timing values
     are nondeterministic, so the pins are structural: every fixture

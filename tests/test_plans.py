@@ -68,8 +68,60 @@ def _assert_arrow_kernel(df) -> None:
     assert "MapInPandas" not in plan, plan
 
 
-def test_media_kernels_plan_as_map_in_arrow(spark):
+def _row_map_cases(spark, tmp_path):
+    """Operators on the row-map helper, each over an empty input:
+    name → (output frame, its declared output schema)."""
+    from openocr_spark.fixtures import LAYOUT_SCHEMA
+    from openocr_spark.operators.doc_parse import doc_parse
+    from openocr_spark.operators.ingest import interleave
+    from openocr_spark.operators.metrics import det_partials, extract_detail, gt_regions
+    from openocr_spark.operators.multimodal import AUDIO_SCHEMA, audio_stats
+    from openocr_spark.operators.preprocess import PREPROC_SCHEMA, det_training_targets
+    from openocr_spark.sources.readers import read_webdataset
+
+    def empty(ddl):
+        return spark.createDataFrame([], ddl)
+
+    refs = empty("media_ref string")
+    quads = "media_ref string, points array<array<int>>"
+    empty_dir = tmp_path / "no_shards"
+    empty_dir.mkdir()
+    return {
+        "gt_regions": (
+            gt_regions(refs),
+            "media_ref string, gt_idx int, points array<array<int>>, "
+            "ignore boolean, gt_text string",
+        ),
+        "extract_detail": (extract_detail(refs), schemas.DET_REC_DETAIL),
+        "det_partials": (
+            det_partials(empty(quads), empty(quads + ", ignore boolean")),
+            "media_ref string, n_gt_care long, n_det_care long, n_matched long",
+        ),
+        "det_training_targets": (det_training_targets(refs), PREPROC_SCHEMA),
+        "interleave": (
+            interleave(empty("doc_id string, text string")), schemas.DOCUMENTS
+        ),
+        "documents_df": (documents_df(spark, 0), schemas.DOCUMENTS),
+        "doc_parse": (
+            doc_parse(empty(LAYOUT_SCHEMA)),
+            "doc_id string, block_id string, label string, task string, "
+            "reading_order int, bbox array<double>, custom_value double, "
+            "has_img boolean, text string",
+        ),
+        "audio_stats": (
+            audio_stats(empty("media_ref string, payload binary")), AUDIO_SCHEMA
+        ),
+        "read_webdataset": (
+            read_webdataset(spark, str(empty_dir)),
+            "shard string, key string, ext string, data binary",
+        ),
+    }
+
+
+def test_media_kernels_plan_as_map_in_arrow(spark, tmp_path):
     import numpy as np
+
+    from pyspark.sql import types as T
 
     from openocr_spark.kernels.media_decode import (
         decode_media,
@@ -88,6 +140,30 @@ def test_media_kernels_plan_as_map_in_arrow(spark):
         "doc_id string, media_ref string, content binary",
     )
     _assert_arrow_kernel(extract_features(decode_media(media)))
+
+    for name, (out, schema) in _row_map_cases(spark, tmp_path).items():
+        if isinstance(schema, str):
+            schema = T.StructType.fromDDL(schema)
+        _assert_arrow_kernel(out)
+        assert out.schema == schema, name
+        assert out.collect() == [], name
+
+
+def test_package_has_no_map_in_pandas_sites():
+    """New Python stages use the Arrow kernel shape (rowmap.map_rows or a
+    hand-written mapInArrow kernel), never a pandas round trip."""
+    import pathlib
+
+    import openocr_spark
+
+    pkg = pathlib.Path(openocr_spark.__file__).parent
+    hits = [
+        f"{path.relative_to(pkg.parent)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "mapInPandas(" in line
+    ]
+    assert not hits, hits
 
 
 def test_cosine_topk_is_distributed_takeordered(spark):
