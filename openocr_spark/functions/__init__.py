@@ -1,8 +1,8 @@
 """Scalar text functions re-creating the reference's normalization /
 truncation / decode semantics (SURVEY.md §2.8). Pure-python kernels live
-in `text.py` / `otsl.py` (unit-tested directly); Spark exposure is via
-the pandas_udf wrappers in `udfs.py` and, where possible, plain column
-expressions in `exprs.py` (preferred: JVM-side)."""
+in `text.py` / `otsl.py` (unit-tested directly) and are called from the
+operators' Arrow kernels; where possible the same logic is a plain
+column expression in `exprs.py` (preferred: JVM-side)."""
 
 from openocr_spark.functions.exprs import (  # noqa: F401
     clean_special_tokens,

@@ -1,5 +1,5 @@
 """Per-pair sequence-evaluation scorers for the CMER (markdown/chart
-extraction) metric — pure Python, batch-applied via a vectorized pandas
+extraction) metric — pure Python, applied per row by the Arrow-batched
 UDF in operators/metrics.cmer_metric.
 
 Semantics follow the reference's rec_metric_cmer.py:

@@ -1,8 +1,7 @@
 """Pure-python text kernels (per-string logic the reference implements
 as scalar helpers). Each is written from scratch against the *semantics*
-documented in SURVEY.md §2.8; unit tests pin the behavior. Spark
-exposure: `udfs.py` wraps them as Arrow-batched pandas UDFs for use on
-span columns.
+documented in SURVEY.md §2.8; unit tests pin the behavior. The
+operators call them directly from their Arrow kernels and row UDFs.
 """
 
 from __future__ import annotations

@@ -2,11 +2,13 @@
 flow (SURVEY §3.2) over a blocks table
 (doc_id, cls_id, label, score, bbox[x1,y1,x2,y2], custom_value).
 
-Per-doc geometric passes (overlap dedup, merge) run as grouped pandas
-UDFs (`applyInPandas` per doc_id): K is dozens of blocks per doc, so the
-O(K²) loops stay in one group — exactly how the reference iterates
-(utils.py:129-168, 258-413) — while docs distribute across the cluster.
-Ordering/numbering/routing are pure column expressions.
+Per-doc geometric passes (overlap dedup, merge) run as grouped Arrow
+maps (`applyInArrow` per doc_id, one `pa.Table` per doc): K is dozens of
+blocks per doc, so the O(K²) loops stay in one group — exactly how the
+reference iterates (utils.py:129-168, 258-413) — while docs distribute
+across the cluster. Ordering/numbering/routing are pure column
+expressions; the per-block scalar steps (figure tokens, markdown) are
+Arrow-batched row UDFs (`udf(useArrow=True)`).
 
 REFERENCE-PATH NOTE (pinned by tests/test_layout_differential.py against
 the reference's own functions). The reference has TWO doc pipelines with
@@ -30,11 +32,11 @@ and is differential-tested there.
 
 from __future__ import annotations
 
+import functools
 import random as _random
 import re
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -93,22 +95,24 @@ def _overlap_union(a, b) -> float:
     return inter / ref if ref > 0 else 0.0
 
 
-def _dedup_one_doc(pdf: pd.DataFrame, threshold: float) -> pd.DataFrame:
+def _dedup_one_doc(labels: list, boxes: list, threshold: float) -> list[int]:
     """Greedy overlap dedup (utils.py:137-168 filter_overlap_boxes,
-    exact): blocks labeled 'reference' are DROPPED OUTRIGHT before the
-    scan (utils.py:140-144 — they never reach routing or markdown); then
-    for any pair with overlap-over-smaller > threshold, drop the
+    exact) over one doc's block labels and bboxes; returns the indices
+    of the kept blocks, in input order. Blocks labeled 'reference' are
+    DROPPED OUTRIGHT before the scan (utils.py:140-144 — they never reach
+    routing or markdown; a NULL label is not 'reference' and stays);
+    then for any pair with overlap-over-smaller > threshold, drop the
     smaller-area block. The exemption is the reference's EXACT rule: one
     side's label is 'image' (only 'image' — a seal-vs-text pair still
     dedups) AND the labels differ (image-vs-image dedups). A block
     dropped mid-scan stops dropping others (the reference re-checks
     dropped_indexes per pair, utils.py:149)."""
-    pdf = pdf[pdf["label"] != "reference"]
-    boxes = np.array(pdf["bbox"].tolist(), dtype=np.float64).reshape(-1, 4)
-    labels = pdf["label"].tolist()
+    idx = [i for i, lb in enumerate(labels) if lb != "reference"]
+    labels = [labels[i] for i in idx]
+    boxes = np.array([boxes[i] for i in idx], dtype=np.float64).reshape(-1, 4)
     areas = np.abs((boxes[:, 2] - boxes[:, 0]) * (boxes[:, 3] - boxes[:, 1]))
     drop: set[int] = set()
-    k = len(pdf)
+    k = len(idx)
     for i in range(k):
         if i in drop:
             continue
@@ -124,17 +128,24 @@ def _dedup_one_doc(pdf: pd.DataFrame, threshold: float) -> pd.DataFrame:
                 ):
                     continue  # image-vs-other exempt (utils.py:157-160)
                 drop.add(j if areas[j] <= areas[i] else i)
-    keep = [i for i in range(k) if i not in drop]
-    return pdf.iloc[keep]
+    return [idx[i] for i in range(k) if i not in drop]
 
 
 def filter_overlap_blocks(blocks: DataFrame, threshold: float = 0.7) -> DataFrame:
-    """Per-doc overlap dedup via applyInPandas (SURVEY §2.3 J4)."""
+    """Per-doc overlap dedup (SURVEY §2.3 J4): one Arrow table per
+    doc_id through applyInArrow, reduced to the rows _dedup_one_doc
+    keeps."""
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _dedup_one_doc(pdf, threshold)
+    def fn(table):
+        import pyarrow as pa
 
-    return blocks.groupBy("doc_id").applyInPandas(fn, schema=blocks.schema)
+        keep = _dedup_one_doc(
+            table["label"].to_pylist(), table["bbox"].to_pylist(), threshold
+        )
+        # typed indices: an empty Python list would infer a null array
+        return table.take(pa.array(keep, pa.int64()))
+
+    return blocks.groupBy("doc_id").applyInArrow(fn, schema=blocks.schema)
 
 
 # ------------------------------------------------------------------ merge
@@ -315,22 +326,30 @@ def merge_blocks_op(
     """merge_block_rows as a per-doc Spark operator (SURVEY §2.8 G13).
     Adds (has_img boolean, is_merged_continuation boolean, post_order
     int — the post-merge sequence position). One shuffle on doc_id."""
-    fields = [f"{f.name} {f.dataType.simpleString()}" for f in blocks.schema.fields]
-    schema = ", ".join(
-        fields
-        + ["has_img boolean", "is_merged_continuation boolean", "post_order int"]
-    )
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("custom_value", kind="stable")
-        merged = merge_block_rows(pdf.to_dict("records"), non_merge_labels)
+    schema = T.StructType(
+        blocks.schema.fields
+        + [
+            T.StructField("has_img", T.BooleanType()),
+            T.StructField("is_merged_continuation", T.BooleanType()),
+            T.StructField("post_order", T.IntegerType()),
+        ]
+    )
+    arrow_schema = to_arrow_schema(schema)
+
+    def fn(table):
+        import pyarrow as pa
+
+        # sort_by is stable: equal custom_values keep their input order
+        rows = table.sort_by("custom_value").to_pylist()
+        merged = merge_block_rows(rows, non_merge_labels)
         for i, r in enumerate(merged):
             r["post_order"] = i
-        return pd.DataFrame(merged, columns=list(pdf.columns) + [
-            "has_img", "is_merged_continuation", "post_order",
-        ])
+        return pa.Table.from_pylist(merged, schema=arrow_schema)
 
-    return blocks.groupBy("doc_id").applyInPandas(fn, schema=schema)
+    return blocks.groupBy("doc_id").applyInArrow(fn, schema=schema)
 
 
 # ------------------------------------------------- order / route / figures
@@ -386,11 +405,13 @@ def route(blocks: DataFrame, use_chart_recognition: bool = True) -> DataFrame:
     )
 
 
+@functools.lru_cache(maxsize=None)
 def figure_token_numbers(n: int) -> list[int]:
     """The reference's seeded token-number assignment
     (utils.py:494-511): the first n integers whose decimal digits avoid
     {0,1,9}, shuffled with the stdlib Mersenne generator seeded 1024 —
-    deterministic per n, identical for every table in a doc."""
+    deterministic per n, identical for every table in a doc. Cached per
+    n: callers must not mutate the returned list."""
     seq: list[int] = []
     i = 0
     while len(seq) < n:
@@ -399,6 +420,11 @@ def figure_token_numbers(n: int) -> list[int]:
         i += 1
     _random.Random(1024).shuffle(seq)
     return seq
+
+
+def _figure_token(fig_idx: int, n_figs: int) -> str:
+    """The `[F{n}]` token of a doc's fig_idx-th figure out of n_figs."""
+    return f"[F{figure_token_numbers(n_figs)[fig_idx]}]"
 
 
 def figure_img_path(label: str, bbox) -> str:
@@ -450,15 +476,7 @@ def figures_in_tables(
         & (F.col("bbox")[3] <= F.col("t_bbox")[3])
     )
     pairs = t.join(figs, "doc_id").filter(contained)
-
-    @F.pandas_udf("string")
-    def token_udf(fig_idx: pd.Series, n_figs: pd.Series) -> pd.Series:
-        cache: dict[int, list[int]] = {}
-        out = []
-        for fi, nf in zip(fig_idx, n_figs):
-            nums = cache.setdefault(int(nf), figure_token_numbers(int(nf)))
-            out.append(f"[F{nums[int(fi)]}]")
-        return pd.Series(out)
+    token_udf = F.udf(_figure_token, "string", useArrow=True)
 
     # the too-small-to-tokenize rule uses RAW float extents (utils.py:522)
     min_dim = F.least(
@@ -500,7 +518,7 @@ def assemble_markdown(blocks: DataFrame) -> DataFrame:
     skip list; functions/markdown.py). Labels here are BASE labels — the
     MarkdownConverter sink belongs to the torch path, which never
     suffixes (see module docstring). The per-block conversion runs as
-    an Arrow-batched pandas UDF (string → string, no kernel state); the
+    an Arrow-batched row UDF over block_markdown (no kernel state); the
     per-doc ordered concatenation stays JVM-side (one groupBy shuffle).
 
     Input: doc_parse output (doc_id, label, text, reading_order,
@@ -508,20 +526,9 @@ def assemble_markdown(blocks: DataFrame) -> DataFrame:
     doc's full ordered block list (reading_order − 1) — skipped blocks
     still advance it, matching the reference's enumerate over
     recognition_results (to_markdown.py:390)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
     from openocr_spark.functions.markdown import block_markdown
 
-    @pandas_udf(StringType())
-    def md_udf(label: pd.Series, text: pd.Series, sec: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                block_markdown(lb, tx, int(s))
-                for lb, tx, s in zip(label, text, sec)
-            ]
-        )
-
+    md_udf = F.udf(block_markdown, "string", useArrow=True)
     frag = blocks.select(
         "doc_id",
         "custom_value",

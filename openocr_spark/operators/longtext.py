@@ -15,7 +15,6 @@ for repetitive long lines — so the fixture metric is non-vacuous."""
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -62,23 +61,18 @@ def merge_slices(slices: DataFrame) -> DataFrame:
 
     Plan: JVM-side collect_list + array_sort does the per-key gather
     (one shuffle with map-side partial aggregation), then ONE
-    Arrow-batched pandas UDF merges thousands of keys per batch —
-    measured ~4× faster than a grouped applyInPandas, which pays
-    per-group pandas-frame overhead on tiny groups."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
+    Arrow-batched row UDF merges thousands of keys per batch — measured
+    ~4× faster than a grouped map (applyInPandas), which pays per-group
+    frame overhead on tiny groups."""
     from openocr_spark.functions.text import stream_merge
 
-    @pandas_udf(StringType())
-    def merge_udf(arr: pd.Series) -> pd.Series:
+    def merge(ordered: list) -> str:
         # single-slice (in-length) texts bypass the stream merge — the
         # reference streams only sliced long lines, and stream_match's
         # boundary trim would drop the last char of a lone segment
-        return pd.Series(
-            [stream_merge([s["slice"] for s in a]) for a in arr]
-        )
+        return stream_merge([s["slice"] for s in ordered])
 
+    merge_udf = F.udf(merge, "string", useArrow=True)
     gathered = slices.groupBy("id").agg(
         F.array_sort(
             F.collect_list(F.struct("slice_idx", "slice"))

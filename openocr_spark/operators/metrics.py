@@ -14,7 +14,6 @@ histograms.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd  # cmer_metric's pandas_udf resolves its type hints here
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -324,21 +323,17 @@ def cmer_metric(
     extraction metric: per-pair ROUGE-1/2/L f-measures, BLEU (13a
     tokenization, max_order 4, unsmoothed), and RAW Levenshtein edit
     distance, averaged over all pairs. Per-pair scorers run in ONE
-    Arrow-batched pandas UDF (functions/seqeval — pure per-row work, no
-    shuffle); the edit distance stays JVM-side via F.levenshtein.
-    Empty input averages to all-zeros like the reference (:308-315)."""
-    from pyspark.sql.functions import pandas_udf
-
+    Arrow-batched row UDF over functions/seqeval.cmer_pair_scores (pure
+    per-row work, no shuffle); the edit distance stays JVM-side via
+    F.levenshtein. Empty input averages to all-zeros like the reference
+    (:308-315)."""
     from openocr_spark.functions.seqeval import cmer_pair_scores
 
-    @pandas_udf("rouge1 double, rouge2 double, rougeL double, bleu double")
-    def scores_udf(pred: pd.Series, gt: pd.Series) -> pd.DataFrame:
-        vals = [
-            cmer_pair_scores(p or "", g or "") for p, g in zip(pred, gt)
-        ]
-        return pd.DataFrame(
-            vals, columns=["rouge1", "rouge2", "rougeL", "bleu"]
-        )
+    scores_udf = F.udf(
+        cmer_pair_scores,
+        "rouge1 double, rouge2 double, rougeL double, bleu double",
+        useArrow=True,
+    )
 
     # NULL pred/gt must score as "" in EVERY column, or edit_distance
     # (F.avg skips the NULL F.levenshtein yields) would average over a

@@ -102,6 +102,11 @@ class TestOTSL:
         html = otsl_to_html("<fcel>a<fcel>b<nl><fcel>c<ecel>")
         assert html == "<table><tr><td>a</td><td>b</td></tr><tr><td>c</td><td></td></tr></table>"
 
+    def test_single_row_without_newline(self):
+        assert otsl_to_html("<fcel>a<fcel>b") == (
+            "<table><tr><td>a</td><td>b</td></tr></table>"
+        )
+
     def test_colspan(self):
         html = otsl_to_html("<fcel>wide<lcel><nl><fcel>a<fcel>b")
         assert '<td colspan="2">wide</td>' in html
@@ -159,25 +164,6 @@ def test_spark_exprs(spark):
     assert row["lev"] == pytest.approx(3 / 7)
     assert row["fd"] == " $  x+y  $  and  $$  z  $$ "
     assert row["cs"] == "hi"
-
-
-def test_spark_udfs(spark):
-    from pyspark.sql import functions as F
-
-    from openocr_spark.functions.udfs import (
-        otsl_to_html_udf,
-        truncate_repetitive_udf,
-    )
-
-    df = spark.createDataFrame(
-        [("ab" * 12, "<fcel>a<fcel>b")], ["rep", "otsl"]
-    )
-    row = df.select(
-        truncate_repetitive_udf(F.col("rep")).alias("t"),
-        otsl_to_html_udf(F.col("otsl")).alias("h"),
-    ).collect()[0]
-    assert row["t"] == "ab"
-    assert row["h"] == "<table><tr><td>a</td><td>b</td></tr></table>"
 
 
 def test_formula_dollars_matches_vlm_dollar_rewrite(spark):

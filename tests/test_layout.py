@@ -56,14 +56,24 @@ def test_score_filter(blocks):
     assert out.count() == blocks.count() - 1
 
 
-def test_overlap_dedup_drops_smaller_keeps_image_predrops_reference(blocks):
-    out = filter_overlap_blocks(score_filter(blocks, 0.4)).collect()
+def test_overlap_dedup_drops_smaller_keeps_image_predrops_reference(spark, blocks):
+    extra = spark.createDataFrame(
+        [
+            ("d1", 9, None, 0.9, [10.0, 300.0, 200.0, 340.0], 8.5, "no label"),
+            ("d3", 5, "reference", 0.9, [0.0, 0.0, 50.0, 50.0], 1.0, "only refs"),
+        ],
+        schema=SCHEMA,
+    )
+    out = filter_overlap_blocks(score_filter(blocks.union(extra), 0.4)).collect()
     texts = {r["text"] for r in out}
     assert "small dup" not in texts  # smaller of overlapping same-kind pair
     assert "big block" in texts
     assert any(r["label"] == "image" for r in out)  # image-vs-text exempt
     # label=='reference' is removed before the scan (utils.py:140-144)
     assert not any(r["label"] == "reference" for r in out)
+    # a NULL label is not 'reference': the block stays
+    assert "no label" in texts
+    assert not any(r["doc_id"] == "d3" for r in out)  # all-reference doc
 
 
 def test_merge_blocks_op(spark):
@@ -140,14 +150,12 @@ def test_dedup_matches_reference_edge_semantics():
     dropped mid-scan stops dropping later blocks; (b) the image
     exemption is label=='image' with DIFFERING labels — seal-vs-text
     still dedups, image-vs-seal is exempt, image-vs-image dedups."""
-    import pandas as pd
-
     from openocr_spark.operators.layout import _dedup_one_doc
 
     def run(rows):
-        pdf = pd.DataFrame(rows)
-        out = _dedup_one_doc(pdf, 0.7)
-        return sorted(out["name"].tolist())
+        labels = [r["label"] for r in rows]
+        boxes = [r["bbox"] for r in rows]
+        return sorted(rows[i]["name"] for i in _dedup_one_doc(labels, boxes, 0.7))
 
     # (a) A dropped by B must not drop C (C overlaps only A)
     rows = [

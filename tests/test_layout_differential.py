@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import random
 
-import pandas as pd
 import pytest
 
 from tests._reference_loader import StubImage, ref_utils
@@ -58,34 +57,20 @@ def test_filter_overlap_boxes_matches_reference():
             ]
         }
         want = [b["uid"] for b in ref(det)["boxes"]]
-
-        pdf = pd.DataFrame(
-            {
-                "label": labels,
-                "bbox": boxes,
-                "uid": list(range(n)),
-            }
-        )
-        got = _dedup_one_doc(pdf, 0.7)["uid"].tolist()
+        got = _dedup_one_doc(labels, boxes, 0.7)  # kept indices == uids
         assert got == want, (trial, labels, boxes)
 
 
 def test_reference_label_predrop():
     """utils.py:140-144: 'reference' boxes never reach the scan — and
     never shield/trigger drops of other boxes."""
-    pdf = pd.DataFrame(
-        {
-            "label": ["reference", "text", "text"],
-            "bbox": [
-                [0.0, 0.0, 100.0, 100.0],
-                [0.0, 0.0, 50.0, 50.0],
-                [2.0, 2.0, 48.0, 48.0],
-            ],
-            "uid": [0, 1, 2],
-        }
-    )
-    out = _dedup_one_doc(pdf, 0.7)
-    assert out["uid"].tolist() == [1]  # reference dropped, dup dedup'd
+    labels = ["reference", "text", "text"]
+    boxes = [
+        [0.0, 0.0, 100.0, 100.0],
+        [0.0, 0.0, 50.0, 50.0],
+        [2.0, 2.0, 48.0, 48.0],
+    ]
+    assert _dedup_one_doc(labels, boxes, 0.7) == [1]  # reference dropped, dup dedup'd
 
 
 # ------------------------------------------------------------- merge

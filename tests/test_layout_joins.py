@@ -37,6 +37,32 @@ def test_figures_in_tables(spark):
     assert toks[4.0][0] is None  # too small to tokenize (utils.py:522)
 
 
+def test_figure_tokens_shuffle_once_per_figure_count(monkeypatch):
+    """The token UDF draws each doc figure count's seeded shuffle once
+    per worker, not once per (table, figure) pair."""
+    import random
+    import types
+
+    from openocr_spark.operators import layout
+
+    seeds = []
+
+    class CountingRandom(random.Random):
+        def __init__(self, seed):
+            seeds.append(seed)
+            super().__init__(seed)
+
+    monkeypatch.setattr(layout, "_random", types.SimpleNamespace(Random=CountingRandom))
+    layout.figure_token_numbers.cache_clear()
+    try:
+        pairs = [(0, 3), (1, 3), (4, 5), (2, 3), (0, 5), (1, 3)]
+        tokens = [layout._figure_token(fi, nf) for fi, nf in pairs]
+    finally:
+        layout.figure_token_numbers.cache_clear()
+    assert tokens[:2] == ["[F4]", "[F3]"]  # figure_token_numbers(3) == [4, 3, 2]
+    assert seeds == [1024, 1024]  # one shuffle each for n_figs 3 and 5
+
+
 def test_untokenize():
     got = untokenize(
         "<fcel>a[F3]b[F7]", {"[F3]": '<img src="imgs/x.jpg" >'}

@@ -773,6 +773,7 @@ def test_empty_input_matches_reference_zero_arithmetic(spark):
 def test_cmer_null_columns_score_as_empty(spark):
     """Review-caught: NULL pred/gt must enter every column as "" so
     edit_distance averages over the SAME sample set as rouge/bleu."""
+    from openocr_spark.functions.seqeval import cmer_pair_scores
     from openocr_spark.operators.metrics import cmer_metric
 
     df = spark.createDataFrame(
@@ -783,6 +784,14 @@ def test_cmer_null_columns_score_as_empty(spark):
     assert row["num_samples"] == 3
     # levenshtein("", "ref text")=8, ("pred text","")=9, ("same","same")=0
     assert row["edit_distance"] == pytest.approx((8 + 9 + 0) / 3, abs=1e-6)
+    # the row UDF scores the same three pairs the driver-side kernel does
+    scores = [
+        cmer_pair_scores(p, g)
+        for p, g in [("", "ref text"), ("pred text", ""), ("same", "same")]
+    ]
+    for k, name in enumerate(["rouge1", "rouge2", "rougeL", "bleu"]):
+        want = sum(s[k] for s in scores) / 3
+        assert row[name] == pytest.approx(want, abs=1e-6), name
 
 
 def test_rec_metric_gtc_composition_matches_reference(spark):

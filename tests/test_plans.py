@@ -118,6 +118,87 @@ def _row_map_cases(spark, tmp_path):
     }
 
 
+def _assert_arrow_group_map(df) -> None:
+    """Per-doc groups go to Python as one Arrow table each."""
+    plan = plans.physical_plan(df)
+    assert "FlatMapGroupsInArrow" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+
+
+def _assert_arrow_row_udf(df) -> None:
+    """Scalar Python columns are Arrow-batched row UDFs: ArrowEvalPython
+    with the row eval type, never the pickled BatchEvalPython or a
+    pandas Series UDF (which also plans as ArrowEvalPython)."""
+    from pyspark.util import PythonEvalType
+
+    plan = plans.physical_plan(df)
+    eval_types = {
+        ln.rsplit(", ", 1)[-1]
+        for ln in plan.splitlines()
+        if "ArrowEvalPython" in ln
+    }
+    assert eval_types == {str(PythonEvalType.SQL_ARROW_BATCHED_UDF)}, plan
+    assert "BatchEvalPython" not in plan, plan
+
+
+def _arrow_udf_cases(spark):
+    """Grouped and scalar Python stages, each over an empty input:
+    name → (plan check, output frame, declared schema, expected rows)."""
+    from openocr_spark.fixtures import LAYOUT_SCHEMA
+    from openocr_spark.operators.layout import (
+        assemble_markdown,
+        figures_in_tables,
+        filter_overlap_blocks,
+        merge_blocks_op,
+        order_and_label,
+    )
+    from openocr_spark.operators.longtext import merge_slices
+    from openocr_spark.operators.metrics import cmer_metric
+
+    blocks = spark.createDataFrame([], LAYOUT_SCHEMA)
+    group, row = _assert_arrow_group_map, _assert_arrow_row_udf
+    return {
+        "filter_overlap_blocks": (
+            group, filter_overlap_blocks(blocks), LAYOUT_SCHEMA, []
+        ),
+        "merge_blocks_op": (
+            group,
+            merge_blocks_op(blocks),
+            LAYOUT_SCHEMA + ", has_img boolean, "
+            "is_merged_continuation boolean, post_order int",
+            [],
+        ),
+        "figures_in_tables": (
+            row,
+            figures_in_tables(order_and_label(blocks)),
+            "doc_id string, t_order double, f_order double, fig_idx int, "
+            "token string, fig_md string",
+            [],
+        ),
+        "assemble_markdown": (
+            row,
+            assemble_markdown(order_and_label(blocks)),
+            "doc_id string, markdown string",
+            [],
+        ),
+        "merge_slices": (
+            row,
+            merge_slices(
+                spark.createDataFrame([], "id string, slice_idx int, slice string")
+            ),
+            "id string, merged string",
+            [],
+        ),
+        "cmer_metric": (
+            row,
+            cmer_metric(spark.createDataFrame([], "pred string, gt string")),
+            "rouge1 double, rouge2 double, rougeL double, bleu double, "
+            "edit_distance double, num_samples long",
+            [(0.0, 0.0, 0.0, 0.0, 0.0, 0)],  # the reference's all-zero row
+        ),
+    }
+
+
 def test_media_kernels_plan_as_map_in_arrow(spark, tmp_path):
     import numpy as np
 
@@ -148,10 +229,20 @@ def test_media_kernels_plan_as_map_in_arrow(spark, tmp_path):
         assert out.schema == schema, name
         assert out.collect() == [], name
 
+    for name, (check, out, ddl, rows) in _arrow_udf_cases(spark).items():
+        check(out)
+        # names and types: the select around a row UDF sets nullability
+        assert out.schema.simpleString() == (
+            T.StructType.fromDDL(ddl).simpleString()
+        ), name
+        assert [tuple(r) for r in out.collect()] == rows, name
+
 
 def test_package_has_no_map_in_pandas_sites():
-    """New Python stages use the Arrow kernel shape (rowmap.map_rows or a
-    hand-written mapInArrow kernel), never a pandas round trip."""
+    """New Python stages use the Arrow kernel shapes (rowmap.map_rows or a
+    hand-written mapInArrow kernel, applyInArrow per group, udf with
+    useArrow=True per scalar column), never a pandas round trip. The one
+    exception is streaming state (applyInPandasWithState)."""
     import pathlib
 
     import openocr_spark
@@ -161,7 +252,10 @@ def test_package_has_no_map_in_pandas_sites():
         f"{path.relative_to(pkg.parent)}:{i}"
         for path in sorted(pkg.rglob("*.py"))
         for i, line in enumerate(path.read_text().splitlines(), 1)
-        if "mapInPandas(" in line
+        if any(
+            site in line
+            for site in ("mapInPandas(", "applyInPandas(", "pandas_udf")
+        )
     ]
     assert not hits, hits
 
