@@ -27,9 +27,8 @@ class ExtractConfig:
     line_tol: int = 10
     # recognition decode head, selected by name like the reference's
     # PostProcess config (openrec/postprocess/__init__.py
-    # build_post_process): ctc | nrtr | srn | gtc | ce | char | abinet |
-    # cppd | smtr | lister | igtr | visionlan | mgp_char | unirec |
-    # cmer | mgp_bpe | mgp_wp  (operators/extract._decode_fn)
+    # build_post_process): one of operators/extract.REC_HEAD_NAMES,
+    # resolved by operators/extract._decode_fn
     rec_head: str = "ctc"
     # id→token table for the tokenizer-backed heads (unirec / cmer /
     # mgp_bpe / mgp_wp) — the trained-tokenizer external artifact, as a

@@ -1,15 +1,23 @@
-"""T.81 Annex D/F arithmetic-coded JPEG entropy decoding (SOF9,
-sequential DCT) — the QM coder plus the Annex F statistical models,
-from the public spec, numpy/stdlib only.
+"""T.81 arithmetic entropy layer (Annex D QM coder, Annex F / H.2
+statistical models), from the public spec, numpy/stdlib only.
 
-The reference decodes JPEG via cv2 (opendet/preprocess/__init__.py:
-85-143); cv2/libjpeg treat arithmetic streams as a first-class coding
-mode, and round 4's fail-loud boundary here was the last JPEG coding
-mode this engine rejected. Scope: sequential DCT (SOF9) AND
-progressive DCT (SOF10 — DC first/refine, AC band first/refine per
-F.2.1.4.3, accumulated into the same coefficient store as Huffman
-progressive), 8-bit, interleaved MCUs, restart intervals, DAC
-conditioning (L/U for DC, Kx for AC).
+This module decodes DATA UNITS only: the scan layer in
+jpeg_format (`_dct_scan`, `_lossless_scan`) owns everything the spec
+defines apart from the entropy coder — the A.2 data-unit order, the
+restart cadence, H.1 prediction and the output stage — and calls the
+per-scan-component decoders built here:
+  dct_decoders      one 8×8 block per call, for sequential (SOF9),
+                    progressive (SOF10: DC first/refine, AC band
+                    first/refine per F.2.1.4.3) and the differential
+                    SOF13/SOF14 frames, into the shared zigzag
+                    coefficient store;
+  lossless_decoders one prediction difference per call, for lossless
+                    (SOF11) and differential-lossless (SOF15) scans,
+                    under the H.2 two-dimensional (Da, Db) model.
+Each also returns the scan's restart reset (consume RSTn, re-run
+INITDEC, clear the statistics areas in place). DAC conditioning
+(L/U for DC and lossless, Kx for AC) is resolved once per scan
+component.
 
 Validation: the test-side encoder (tests/jpeg_arith_ref_encoder.py)
 implements the ENCODE direction independently (its own carry/stuff
@@ -28,7 +36,6 @@ Layout of the statistics areas (Table F.4):
     high-k (k > Kx) ladder+bits at 217..244. The AC sign uses a FIXED
     (non-adapting) 0.5-probability state.
 """
-
 from __future__ import annotations
 
 import numpy as np
@@ -102,12 +109,15 @@ class ArithDecoder:
     def __init__(self, data: bytes, pos: int) -> None:
         self.data = data
         self.pos = pos
-        self.marker_hit = False
+        self._initdec()
+
+    def _initdec(self) -> None:
         # INITDEC: the first two data bytes form the initial code value
         # v = B0<<8 | B1 aligned at chigh (bits 16..31), CT = 0 so the
         # first renormalization immediately feeds the next byte at bits
         # 8..15 (each byte then needs exactly 8 shifts to reach chigh —
         # consistent with the encoder's CT=11 / window-at-19 emission)
+        self.marker_hit = False
         self.c = (self._byte() << 24) | (self._byte() << 16)
         self.ct = 0
         self.a = 0x8000
@@ -131,13 +141,9 @@ class ArithDecoder:
             return 0
         return b
 
-    def _bytein(self) -> None:
-        self.c += self._byte() << 8
-        self.ct = 8
-
     def decode(self, ctx: _Ctx) -> int:
         # local-variable form of the spec's DECODE + RENORMD (with
-        # _bytein inlined): this method runs once per coded decision
+        # BYTEIN inlined): this method runs once per coded decision
         # and the self.a/self.c/self.ct attribute traffic was the
         # hottest remaining line of the arithmetic decode once the
         # IDCT stopped dominating (guide §1.2). Control flow and
@@ -171,7 +177,7 @@ class ArithDecoder:
                     ctx.mps = 1 - ctx.mps
                 ctx.idx = nlps
             a = qe
-        # RENORMD (with _bytein inlined)
+        # RENORMD (with BYTEIN inlined)
         ct = self.ct
         while a < 0x8000:
             if ct == 0:
@@ -185,36 +191,49 @@ class ArithDecoder:
         self.ct = ct
         return d
 
-    def align_restart(self) -> None:
-        """Consume one RSTn marker (byte-aligned by construction)."""
+    def restart(self) -> None:
+        """Consume one RSTn marker (byte-aligned by construction) and
+        start a fresh codestream after it (INITDEC, F.2.4)."""
         d = self.data
         pos = self.pos
         while pos + 1 < len(d):
             if d[pos] == 0xFF and 0xD0 <= d[pos + 1] <= 0xD7:
                 self.pos = pos + 2
+                self._initdec()
                 return
             pos += 1
         raise NotImplementedError("JPEG-arith: expected restart marker")
 
 
-class _Stats:
-    """Per-scan statistics areas + DC predictors/conditioning."""
+def _reset(banks) -> None:
+    """Return every bin of the given statistics banks to its initial
+    state (Qe index 0, MPS 0) in place."""
+    for bank in banks:
+        for ctx in bank:
+            ctx.idx = 0
+            ctx.mps = 0
 
-    def __init__(self, comps: list[dict]) -> None:
-        self.dc = {c["tq_dc_tbl"]: _ctx_bank(64) for c in comps}
-        self.ac = {c["tq_ac_tbl"]: _ctx_bank(256) for c in comps}
+
+class _Stats:
+    """Statistics areas of one DCT scan: a DC and an AC bank per table
+    id named by the scan's `(comp, td, ta)` triples (components sharing
+    a table share its bank), the fixed AC-sign bin, and per-component
+    DC predictors and conditioning classes. `reset` clears all of it in
+    place, so block decoders may hold references to the banks."""
+
+    def __init__(self, scan: list[tuple[dict, int, int]]) -> None:
+        self.dc = {td: _ctx_bank(64) for _c, td, _ta in scan}
+        self.ac = {ta: _ctx_bank(256) for _c, _td, ta in scan}
         self.fixed = _Ctx()
         self.fixed.idx = FIXED_BIN
-        self.dc_context = {c["id"]: 0 for c in comps}
-        self.pred = {c["id"]: 0 for c in comps}
+        self.dc_context = {c["id"]: 0 for c, _td, _ta in scan}
+        self.pred = {c["id"]: 0 for c, _td, _ta in scan}
 
-    def reset(self, comps: list[dict]) -> None:
-        for bank in list(self.dc.values()) + list(self.ac.values()):
-            for ctx in bank:
-                ctx.idx = 0
-                ctx.mps = 0
-        self.dc_context = {c["id"]: 0 for c in comps}
-        self.pred = {c["id"]: 0 for c in comps}
+    def reset(self) -> None:
+        _reset((*self.dc.values(), *self.ac.values()))
+        for cid in self.pred:
+            self.dc_context[cid] = 0
+            self.pred[cid] = 0
 
 
 def _decode_dc(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
@@ -256,23 +275,25 @@ def _decode_dc(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
     return -v if sign else v
 
 
-def _decode_ac(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
-               kx: int, zz: np.ndarray) -> None:
-    """F.2.1.4.2: decode the 63 AC coefficients of one block into zz
-    (zigzag order). Unlike DC, the magnitude category spends TWO
-    decisions in the per-k context (v>1?, v>2?) before entering the
-    shared low-k / high-k ladder."""
-    k = 1
-    while k <= 63:
+def _decode_ac(dec: ArithDecoder, st: list[_Ctx], fixed: _Ctx, kx: int,
+               zz, ss: int, se: int, al: int) -> None:
+    """F.2.1.4.2: decode the AC coefficients Ss..Se of one block into zz
+    (zigzag order), point-transformed by Al — the whole 1..63 band at
+    Al = 0 for sequential scans, one band of a first progressive AC
+    scan otherwise (F.2.1.4.3 uses the same model). Unlike DC, the
+    magnitude category spends TWO decisions in the per-k context
+    (v>1?, v>2?) before entering the shared low-k / high-k ladder."""
+    k = ss
+    while k <= se:
         base = 3 * (k - 1)
         if dec.decode(st[base]):  # EOB
             return
         while dec.decode(st[base + 1]) == 0:
             k += 1
-            if k > 63:
-                raise NotImplementedError("JPEG-arith: AC index overflow")
+            if k > se:
+                raise NotImplementedError("JPEG-arith: AC index past Se")
             base = 3 * (k - 1)
-        sign = dec.decode(stats.fixed)
+        sign = dec.decode(fixed)
         j = base + 2
         m = dec.decode(st[j])
         if m != 0 and dec.decode(st[j]):
@@ -292,136 +313,17 @@ def _decode_ac(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
             if dec.decode(bits_ctx):
                 v |= mm
             mm >>= 1
-        v += 1
+        v = (v + 1) << al
         zz[k] = -v if sign else v
         k += 1
 
 
-def decode_arith_scan(
-    data: bytes,
-    pos: int,
-    frame: dict,
-    scan: list[tuple[dict, int, int]],
-    restart_interval: int,
-    conditioning: dict,
-    store: dict[int, np.ndarray],
-) -> None:
-    """Sequential arithmetic scan → the zigzag coefficient store (the
-    same store-based reconstruction as the Huffman path — decode_jpeg
-    batch-IDCTs it at EOI / the next frame header; only the entropy
-    layer differs here). Interleaved scans walk the padded MCU grid;
-    Ns=1 scans are non-interleaved per T.81 A.2.2 (block raster over
-    the component's own grid), so a sequential arithmetic frame may
-    spread its components across several scans."""
-    from openocr_spark.kernels.jpeg_format import _comp_blocks
-
-    comps = frame["comps"]
-    # scan entry: (comp, td, ta) — arithmetic tables use the same ids
-    for comp, td, ta in scan:
-        comp["tq_dc_tbl"] = td
-        comp["tq_ac_tbl"] = ta
-    stats = _Stats([c for c, _t, _a in scan])
-    dec = ArithDecoder(data, pos)
-    # differential frames (hierarchical): DC coded directly (PRED = 0)
-    diff_frame = bool(frame.get("differential"))
-
-    def decode_block(comp, td, ta, by, bx):
-        zz = [0] * 64
-        diff = _decode_dc(
-            dec, stats.dc[td], stats, comp["id"],
-            conditioning.get(("dc", td), (0, 1)),
-        )
-        if diff_frame:
-            zz[0] = diff
-        else:
-            stats.pred[comp["id"]] += diff
-            zz[0] = stats.pred[comp["id"]]
-        _decode_ac(dec, stats.ac[ta], stats,
-                   conditioning.get(("ac", ta), 5), zz)
-        store[comp["id"]][by, bx] = zz
-
-    def restart():
-        dec.align_restart()
-        stats.reset([c for c, _t, _a in scan])
-        dec.__init__(data, dec.pos)
-
-    n = 0  # MCUs since scan start
-    if len(scan) > 1:  # interleaved: MCU order over the padded grid
-        hmax = max(c["h"] for c in comps)
-        vmax = max(c["v"] for c in comps)
-        mcus_x = -(-frame["w"] // (8 * hmax))
-        mcus_y = -(-frame["h"] // (8 * vmax))
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if restart_interval and n and n % restart_interval == 0:
-                    restart()
-                for comp, td, ta in scan:
-                    for by in range(comp["v"]):
-                        for bx in range(comp["h"]):
-                            decode_block(
-                                comp, td, ta,
-                                my * comp["v"] + by, mx * comp["h"] + bx,
-                            )
-                n += 1
-    else:
-        comp, td, ta = scan[0]
-        bh, bw = _comp_blocks(frame, comp)
-        for by in range(bh):
-            for bx in range(bw):
-                if restart_interval and n and n % restart_interval == 0:
-                    restart()
-                decode_block(comp, td, ta, by, bx)
-                n += 1
-
-
-# --- progressive arithmetic (SOF10, F.2.1.4.3) -------------------------
-#
-# Same spectral-selection / successive-approximation scan structure as
-# Huffman progressive (jpeg_format._progressive_scan), with the Annex F
-# arithmetic models per scan kind: DC-first = the sequential DC model
-# over point-transformed values; DC-refine = ONE fixed-bin decision per
-# block; AC-first = the sequential AC model over the Ss..Se band;
-# AC-refine = per-coefficient correction/significance decisions.
-# Statistics and the coder reset at every scan (and restart interval).
-
-
-def _prog_ac_first(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
-                   kx: int, zz: np.ndarray, ss: int, se: int, al: int) -> None:
-    k = ss
-    while k <= se:
-        base = 3 * (k - 1)
-        if dec.decode(st[base]):  # EOB
-            return
-        while dec.decode(st[base + 1]) == 0:
-            k += 1
-            if k > se:
-                raise NotImplementedError("JPEG-arith: AC index past Se")
-            base = 3 * (k - 1)
-        sign = dec.decode(stats.fixed)
-        j = base + 2
-        m = dec.decode(st[j])
-        if m != 0 and dec.decode(st[j]):
-            m = 2
-            j = 189 if k <= kx else 217
-            while dec.decode(st[j]):
-                m <<= 1
-                if m == 0x8000:
-                    raise NotImplementedError("JPEG-arith: AC magnitude overflow")
-                j += 1
-        v = m
-        bits_ctx = st[j + 14]
-        mm = m >> 1
-        while mm:
-            if dec.decode(bits_ctx):
-                v |= mm
-            mm >>= 1
-        v += 1
-        zz[k] = -(v << al) if sign else (v << al)
-        k += 1
-
-
-def _prog_ac_refine(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
-                    zz: np.ndarray, ss: int, se: int, al: int) -> None:
+def _decode_ac_refine(dec: ArithDecoder, st: list[_Ctx], fixed: _Ctx,
+                      zz, ss: int, se: int, al: int) -> None:
+    """F.2.1.4.3 AC refinement of one block's Ss..Se band: a correction
+    decision per already-nonzero coefficient, a significance decision
+    (plus fixed-bin sign) per still-zero one, and the EOB decision only
+    at outer-loop entries past the last previously-nonzero index."""
     p1 = 1 << al
     m1 = -(1 << al)
     kex = se
@@ -439,7 +341,7 @@ def _prog_ac_refine(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
                     zz[k] += m1 if zz[k] < 0 else p1
                 break
             if dec.decode(st[base + 1]):
-                zz[k] = m1 if dec.decode(stats.fixed) else p1
+                zz[k] = m1 if dec.decode(fixed) else p1
                 break
             k += 1
             if k > se:
@@ -448,113 +350,82 @@ def _prog_ac_refine(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
         k += 1
 
 
-def progressive_arith_scan(
+def dct_decoders(
     data: bytes,
     pos: int,
     frame: dict,
     scan: list[tuple[dict, int, int]],
-    restart_interval: int,
     conditioning: dict,
     ss: int,
     se: int,
     ah: int,
     al: int,
     store: dict[int, np.ndarray],
-) -> None:
-    """Accumulate one SOF10 scan into the shared progressive
-    coefficient store (zigzag int32, same layout as the Huffman path —
-    dequant + IDCT happen once at EOI via _progressive_reconstruct)."""
-    from openocr_spark.kernels.jpeg_format import _comp_blocks
-
-    comps = frame["comps"]
-    for comp, td, ta in scan:
-        comp["tq_dc_tbl"] = td
-        comp["tq_ac_tbl"] = ta
-    scan_comps = [c for c, _t, _a in scan]
-    stats = _Stats(scan_comps)
+):
+    """Arithmetic entropy layer of one DCT scan whose codestream starts
+    at `pos`: one block decoder `(by, bx)` per scan component, each
+    decoding that data unit into `store[cid][by, bx]` (zigzag int32),
+    plus the scan's restart reset. The block kind follows the scan:
+    sequential (DC + AC 1..63), or progressive DC first / DC refine
+    (one fixed-bin decision) / AC band first / AC band refine.
+    Differential frames code DC directly (PRED = 0)."""
     dec = ArithDecoder(data, pos)
-    unit = 0
+    stats = _Stats(scan)
+    pred = stats.pred
+    fixed = stats.fixed
+    diff_frame = bool(frame.get("differential"))
 
-    def maybe_restart():
-        nonlocal dec, stats, unit
-        if restart_interval and unit and unit % restart_interval == 0:
-            dec.align_restart()
-            stats = _Stats(scan_comps)
-            dec = ArithDecoder(data, dec.pos)
+    def restart() -> None:
+        dec.restart()
+        stats.reset()
 
-    if ss == 0:  # DC scan
-        if se != 0:
-            raise NotImplementedError("JPEG-arith: DC scan with Se != 0")
-        if len(scan) > 1:  # interleaved, MCU order
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            mcus_x = -(-frame["w"] // (8 * hmax))
-            mcus_y = -(-frame["h"] // (8 * vmax))
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    maybe_restart()
-                    for comp, td, _ta in scan:
-                        cid = comp["id"]
-                        for by in range(comp["v"]):
-                            for bx in range(comp["h"]):
-                                blk = store[cid][
-                                    my * comp["v"] + by, mx * comp["h"] + bx
-                                ]
-                                if ah == 0:
-                                    diff = _decode_dc(
-                                        dec, stats.dc[td], stats, cid,
-                                        conditioning.get(("dc", td), (0, 1)),
-                                    )
-                                    if frame.get("differential"):
-                                        blk[0] = diff << al
-                                    else:
-                                        stats.pred[cid] += diff
-                                        blk[0] = stats.pred[cid] << al
-                                elif dec.decode(stats.fixed):
-                                    blk[0] |= 1 << al
-                    unit += 1
-        else:
-            comp, td, _ta = scan[0]
-            cid = comp["id"]
-            bh, bw = _comp_blocks(frame, comp)
-            for by in range(bh):
-                for bx in range(bw):
-                    maybe_restart()
-                    blk = store[cid][by, bx]
-                    if ah == 0:
-                        diff = _decode_dc(
-                            dec, stats.dc[td], stats, cid,
-                            conditioning.get(("dc", td), (0, 1)),
-                        )
-                        if frame.get("differential"):
-                            blk[0] = diff << al
-                        else:
-                            stats.pred[cid] += diff
-                            blk[0] = stats.pred[cid] << al
-                    elif dec.decode(stats.fixed):
-                        blk[0] |= 1 << al
-                    unit += 1
-        return
+    def block_decoder(comp: dict, td: int, ta: int):
+        cid = comp["id"]
+        cstore = store[cid]
+        dc_st = stats.dc[td]
+        ac_st = stats.ac[ta]
+        cond = conditioning.get(("dc", td), (0, 1))
+        kx = conditioning.get(("ac", ta), 5)
+        if not frame["progressive"]:
+            def sequential(by: int, bx: int) -> None:
+                zz = [0] * 64
+                diff = _decode_dc(dec, dc_st, stats, cid, cond)
+                if diff_frame:
+                    zz[0] = diff
+                else:
+                    pred[cid] += diff
+                    zz[0] = pred[cid]
+                _decode_ac(dec, ac_st, fixed, kx, zz, 1, 63, 0)
+                cstore[by, bx] = zz
+            return sequential
+        if ss == 0 and ah == 0:
+            def dc_first(by: int, bx: int) -> None:
+                diff = _decode_dc(dec, dc_st, stats, cid, cond)
+                if not diff_frame:
+                    pred[cid] += diff
+                    diff = pred[cid]
+                cstore[by, bx, 0] = diff << al
+            return dc_first
+        if ss == 0:
+            bit = 1 << al
 
-    if len(scan) != 1:
-        raise NotImplementedError("JPEG-arith: interleaved AC scan")
-    comp, _td, ta = scan[0]
-    kx = conditioning.get(("ac", ta), 5)
-    arr = store[comp["id"]]
-    bh, bw = _comp_blocks(frame, comp)
-    for by in range(bh):
-        for bx in range(bw):
-            maybe_restart()
-            if ah == 0:
-                _prog_ac_first(dec, stats.ac[ta], stats, kx, arr[by, bx],
-                               ss, se, al)
-            else:
-                _prog_ac_refine(dec, stats.ac[ta], stats, arr[by, bx],
-                                ss, se, al)
-            unit += 1
+            def dc_refine(by: int, bx: int) -> None:
+                if dec.decode(fixed):
+                    cstore[by, bx, 0] |= bit
+            return dc_refine
+        if ah == 0:
+            def ac_first(by: int, bx: int) -> None:
+                _decode_ac(dec, ac_st, fixed, kx, cstore[by, bx], ss, se, al)
+            return ac_first
+
+        def ac_refine(by: int, bx: int) -> None:
+            _decode_ac_refine(dec, ac_st, fixed, cstore[by, bx], ss, se, al)
+        return ac_refine
+
+    return [block_decoder(*s) for s in scan], restart
 
 
-# --- lossless arithmetic (SOF11, Annex H.2) ----------------------------
+# --- lossless (SOF11 / SOF15, Annex H.2) --------------------------------
 #
 # The lossless statistical model is the sequential DC model expanded to
 # two dimensions (H.2.1): contexts are conditioned on the 5-category
@@ -566,11 +437,9 @@ def progressive_arith_scan(
 #   100..128 magnitude ladder X1..X15 + bits M2..M15 (Mn = Xn + 14),
 #            used when Db is NOT in a large category
 #   129..157 second ladder + bits, used when Db IS large
-# Spatial prediction, modulo-65536 reconstruction, point transform and
-# restart semantics are identical to the Huffman lossless path (Annex
-# H.1 applies to both entropy modes; only the difference coding layer
-# changes). The first sample of the scan / of a restart interval is
-# coded with the default prediction and (Da, Db) = (zero, zero).
+# Prediction and reconstruction are jpeg_format._lossless_scan's (Annex
+# H.1 applies to both entropy modes); only the difference coding
+# differs.
 
 _LL_SET0 = 100  # ladder when Db classification is zero/small
 _LL_SET1 = 129  # ladder when Db classification is large
@@ -587,118 +456,63 @@ def _ll_classify(m: int, sign: int, L: int, U: int) -> int:
     return 1 + sign
 
 
-def decode_lossless_arith_scan(
+def lossless_decoders(
     data: bytes,
     pos: int,
     frame: dict,
     scan: list[tuple[dict, int, int]],
-    restart_interval: int,
     conditioning: dict,
-    predictor: int,
-    pt: int,
-) -> np.ndarray:
-    """T.81 Annex H.2 lossless arithmetic scan → assembled image
-    (same output conventions as jpeg_format._decode_lossless_scan:
-    bit-exact samples, >8-bit precision down-converted to uint8)."""
-    from openocr_spark.kernels.jpeg_format import lossless_output
-
+):
+    """Arithmetic entropy layer of one lossless scan whose codestream
+    starts at `pos`: one difference decoder `(y, x, fresh, ra_row) ->
+    diff` per scan component, plus the scan's restart reset. The
+    position arguments select the (Da, Db) context: both are zero at
+    the first sample of the scan or of a restart interval (`fresh`), Da
+    at column 0 and Db on the interval's first line (`ra_row`, the
+    line above lies outside the interval there — mirrored by the test
+    encoder)."""
     h, w = frame["h"], frame["w"]
-    prec = frame["prec"]
-    if any(c["h"] != 1 or c["v"] != 1 for c, _t, _a in scan):
-        raise NotImplementedError("JPEG: subsampled lossless components")
-    # differential frames (SOF15, hierarchical): Ss = 0 — no spatial
-    # prediction; the coded values ARE the differences vs the reference
-    diff_frame = bool(frame.get("differential"))
-    if diff_frame:
-        if predictor != 0:
-            raise NotImplementedError(
-                "JPEG: differential lossless scan requires Ss = 0"
-            )
-        if pt != 0:
-            raise NotImplementedError(
-                "JPEG: point transform in differential lossless scan"
-            )
-    elif not 1 <= predictor <= 7:
-        raise NotImplementedError(f"JPEG: lossless predictor {predictor}")
-    planes = {c["id"]: np.zeros((h, w), np.int32) for c, _t, _a in scan}
-    cls = {c["id"]: np.zeros((h, w), np.uint8) for c, _t, _a in scan}
-    banks = {td: _ctx_bank(158) for _c, td, _a in scan}
-    conds = {td: conditioning.get(("dc", td), (0, 1)) for _c, td, _a in scan}
     dec = ArithDecoder(data, pos)
-    default = 1 << (prec - 1 - pt)
-    unit = 0
-    fresh = True
-    ra_row = 0  # row where the current restart interval began (T.81
-    # H.1.1: the 1-D Ra predictor serves the first line of the scan
-    # and of each restart interval; conditioning treats the line above
-    # as outside the interval there, mirrored by the test encoder)
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and unit and unit % restart_interval == 0:
-                dec.align_restart()
-                for bank in banks.values():
-                    for ctx in bank:
-                        ctx.idx = 0
-                        ctx.mps = 0
-                dec.__init__(data, dec.pos)
-                fresh = True
-                ra_row = y
-            for comp, td, _ta in scan:
-                st = banks[td]
-                L, U = conds[td]
-                p = planes[comp["id"]]
-                cl = cls[comp["id"]]
-                da = 0 if (fresh or x == 0) else int(cl[y, x - 1])
-                db = 0 if (fresh or y == ra_row) else int(cl[y - 1, x])
-                base = 4 * (5 * da + db)
-                if dec.decode(st[base]) == 0:
-                    diff = 0
-                    cl[y, x] = 0
-                else:
-                    sign = dec.decode(st[base + 1])
-                    k = base + 2 + sign
-                    m = dec.decode(st[k])
-                    if m != 0:
-                        k = _LL_SET1 if db >= 3 else _LL_SET0
-                        while dec.decode(st[k]):
-                            m <<= 1
-                            if m == 0x8000:
-                                raise NotImplementedError(
-                                    "JPEG-arith: lossless magnitude overflow"
-                                )
-                            k += 1
-                    v = m
-                    bits_ctx = st[k + 14]  # unused when m < 2
-                    mm = m >> 1
-                    while mm:
-                        if dec.decode(bits_ctx):
-                            v |= mm
-                        mm >>= 1
-                    v += 1
-                    cl[y, x] = _ll_classify(m, sign, L, U)
-                    diff = -v if sign else v
-                if diff_frame:
-                    px = 0
-                elif fresh:
-                    px = default
-                elif y == ra_row:
-                    px = int(p[y, x - 1])
-                elif x == 0:
-                    px = int(p[y - 1, 0])
-                else:
-                    a = int(p[y, x - 1])
-                    b = int(p[y - 1, x])
-                    c = int(p[y - 1, x - 1])
-                    px = (
-                        a, b, c, a + b - c,
-                        a + ((b - c) >> 1), b + ((a - c) >> 1),
-                        (a + b) >> 1,
-                    )[predictor - 1]
-                p[y, x] = (px + diff) & 0xFFFF
-            fresh = False
-            unit += 1
-    if frame.get("_raw_planes"):
-        return planes
-    return lossless_output(
-        [planes[comp["id"]] for comp, _t, _a in scan], prec, pt
-    )
+    banks = {td: _ctx_bank(158) for _c, td, _ta in scan}
+
+    def restart() -> None:
+        dec.restart()
+        _reset(banks.values())
+
+    def diff_decoder(td: int):
+        st = banks[td]
+        L, U = conditioning.get(("dc", td), (0, 1))
+        cl = np.zeros((h, w), np.uint8)
+
+        def decode(y: int, x: int, fresh: bool, ra_row: int) -> int:
+            da = 0 if (fresh or x == 0) else int(cl[y, x - 1])
+            db = 0 if (fresh or y == ra_row) else int(cl[y - 1, x])
+            base = 4 * (5 * da + db)
+            if dec.decode(st[base]) == 0:
+                cl[y, x] = 0
+                return 0
+            sign = dec.decode(st[base + 1])
+            k = base + 2 + sign
+            m = dec.decode(st[k])
+            if m != 0:
+                k = _LL_SET1 if db >= 3 else _LL_SET0
+                while dec.decode(st[k]):
+                    m <<= 1
+                    if m == 0x8000:
+                        raise NotImplementedError(
+                            "JPEG-arith: lossless magnitude overflow"
+                        )
+                    k += 1
+            v = m
+            bits_ctx = st[k + 14]  # unused when m < 2
+            mm = m >> 1
+            while mm:
+                if dec.decode(bits_ctx):
+                    v |= mm
+                mm >>= 1
+            v += 1
+            cl[y, x] = _ll_classify(m, sign, L, U)
+            return -v if sign else v
+        return decode
+
+    return [diff_decoder(td) for _c, td, _ta in scan], restart

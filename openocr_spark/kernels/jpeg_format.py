@@ -14,6 +14,13 @@ scans (T.81 A.2.2), nearest-neighbor chroma upsample, BT.601
 YCbCr→RGB. EXIF orientation (APP1 tag 0x0112) is applied by default,
 matching cv2.imread/imdecode.
 
+One scan layer serves both entropy coders: `_dct_scan` walks the
+T.81 A.2 data-unit order and fires the restarts for every DCT scan,
+`_lossless_scan` runs the Annex H prediction and reconstruction for
+every lossless scan, and each coder (Huffman here, arithmetic in
+kernels/jpeg_arith) supplies only per-data-unit decoders and a
+restart reset, resolved once per scan.
+
 Scope: baseline sequential (SOF0) AND progressive (SOF2 — spectral
 selection, successive approximation with DC/AC refinement scans, EOBn
 block runs, per-scan restart intervals; T.81 Annex G), 8-bit samples,
@@ -36,8 +43,7 @@ tables parse. LOSSLESS is decoded in BOTH entropy modes: Huffman SOF3
 (Annex H.1: the 7 spatial predictors + point transform, bit-exact, 2-
 to 16-bit precision) and arithmetic SOF11 (Annex H.2: the same
 prediction pipeline with differences QM-coded under the
-two-dimensional (Da, Db) conditioning model —
-jpeg_arith.decode_lossless_arith_scan). 12-bit DCT precision decodes
+two-dimensional (Da, Db) conditioning model). 12-bit DCT precision decodes
 with high-bits down-conversion to uint8 (the 16-bit-PNG convention).
 HIERARCHICAL mode (T.81 Annex J, late-r5) is decoded too: DHP opens
 the pyramid, EXP expands the reference components (J.1.1.2
@@ -56,6 +62,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from openocr_spark.kernels import jpeg_arith
 
 ZIGZAG = np.array([
      0,  1,  8, 16,  9,  2,  3, 10,
@@ -422,18 +430,7 @@ def _decode_stream(data: bytes) -> np.ndarray:
                     hier, frame, _progressive_planes(frame, qtables, coef_store)
                 )
                 coef_store = None
-            # a multi-scan lossless frame left incomplete by the next
-            # SOF must fail loudly, not fold/assemble without its
-            # missing components (mirrors the EOI check)
-            if frame is not None and frame.get("_lossless_planes") and len(
-                frame["_lossless_planes"]
-            ) < len(frame["comps"]):
-                missing = [c["id"] for c in frame["comps"]
-                           if c["id"] not in frame["_lossless_planes"]]
-                raise NotImplementedError(
-                    "JPEG: lossless frame ended with undecoded "
-                    f"components {missing}"
-                )
+            _check_lossless_complete(frame)
             prec, h, w, nc = struct.unpack_from(">BHHB", body, 0)
             from openocr_spark.kernels.media_decode import check_dims
             check_dims(w, h, "JPEG", max(nc, 1))
@@ -481,7 +478,6 @@ def _decode_stream(data: bytes) -> np.ndarray:
                     )
                 frame["exp"] = pending_exp
                 pending_exp = None
-                frame["_raw_planes"] = True
         elif marker == 0xCC:  # DAC — arithmetic conditioning
             b = 0
             while b + 1 < len(body):
@@ -511,7 +507,8 @@ def _decode_stream(data: bytes) -> np.ndarray:
                 comp = next(c for c in frame["comps"] if c["id"] == cs)
                 scan.append((comp, tdta >> 4, tdta & 0x0F))
             ss, se, ahal = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
-            if not frame.get("lossless"):
+            start = pos + seglen
+            if not frame["lossless"]:
                 # freeze each component's quant table at its first scan
                 # (libjpeg's binding semantics): dequantization of the
                 # coefficient store is DEFERRED to the frame fold / EOI,
@@ -525,123 +522,55 @@ def _decode_stream(data: bytes) -> np.ndarray:
                                 f"JPEG: scan before DQT {comp['tq']}"
                             )
                         comp["qsnap"] = qtables[comp["tq"]].copy()
-            out = None
-            if frame.get("lossless"):
-                # Ss = predictor selector (1..7; 0 in differential
-                # frames), Al = point transform
-                if hier is not None and (ahal & 0x0F) != 0:
-                    raise NotImplementedError(
-                        "JPEG: point transform in hierarchical lossless scan"
-                    )
-                pt = ahal & 0x0F
-                if pt != frame.setdefault("_pt", pt):
-                    raise NotImplementedError(
-                        "JPEG: point transform changes between lossless scans"
-                    )
-                # a lossless frame may carry several scans (one
-                # component per scan, T.81 A.2.2 — like the sequential
-                # store-based path): decode each scan to raw planes,
-                # accumulate, assemble only when every frame component
-                # has been seen
-                was_raw = frame.get("_raw_planes", False)
-                frame["_raw_planes"] = True
-                if frame.get("arith"):
-                    from openocr_spark.kernels.jpeg_arith import (
-                        decode_lossless_arith_scan,
-                    )
-
-                    scan_planes = decode_lossless_arith_scan(
-                        data, pos + seglen, frame, scan, restart_interval,
-                        conditioning, ss, pt,
-                    )
-                else:
-                    scan_planes = _decode_lossless_scan(
-                        data, pos + seglen, frame, scan, htables,
-                        restart_interval, ss, pt,
-                    )
-                frame["_raw_planes"] = was_raw
-                store = frame.setdefault("_lossless_planes", {})
-                store.update(scan_planes)
-                if len(store) < len(frame["comps"]):
-                    pos = _next_marker(data, pos + seglen)
-                    continue
-                if was_raw:  # hierarchical fold consumes raw planes
-                    out = dict(store)
-                else:
-                    out = lossless_output(
-                        [store[c["id"]] for c in frame["comps"]],
-                        frame["prec"], pt,
-                    )
-            elif frame.get("arith") and frame["progressive"]:
-                from openocr_spark.kernels.jpeg_arith import (
-                    progressive_arith_scan,
-                )
-
+                # every DCT scan (sequential or progressive, either
+                # coder) entropy-decodes into the zigzag coefficient
+                # store; reconstruction is the batched IDCT at EOI / the
+                # next frame header, so a frame may spread its
+                # components over several scans
                 if coef_store is None:
                     coef_store = _alloc_coef_store(frame)
-                progressive_arith_scan(
-                    data, pos + seglen, frame, scan, restart_interval,
-                    conditioning, ss, se, ahal >> 4, ahal & 0x0F,
+                _dct_scan(
+                    data, start, frame, scan, htables, conditioning,
+                    restart_interval, ss, se, ahal >> 4, ahal & 0x0F,
                     coef_store,
                 )
-                pos = _next_marker(data, pos + seglen)
+                pos = _next_marker(data, start)
                 continue
-            elif frame.get("arith"):
-                # sequential arithmetic: same store-based flow as the
-                # Huffman branch below (batched IDCT at EOI / the next
-                # frame header; multi-scan non-interleaved frames work)
-                from openocr_spark.kernels.jpeg_arith import decode_arith_scan
-
-                if coef_store is None:
-                    coef_store = _alloc_coef_store(frame)
-                decode_arith_scan(
-                    data, pos + seglen, frame, scan,
-                    restart_interval, conditioning, coef_store,
+            # lossless: Ss = predictor selector (1..7; 0 in differential
+            # frames), Al = point transform
+            pt = ahal & 0x0F
+            if hier is not None and pt != 0:
+                raise NotImplementedError(
+                    "JPEG: point transform in hierarchical lossless scan"
                 )
-                pos = _next_marker(data, pos + seglen)
-                continue
-            elif not frame["progressive"]:
-                # sequential Huffman: entropy-decode into the zigzag
-                # coefficient store; reconstruction is the shared
-                # batched-IDCT path at EOI / the next frame header —
-                # this also lets a sequential frame carry several
-                # non-interleaved scans (one per component, T.81 A.2.2)
-                if coef_store is None:
-                    coef_store = _alloc_coef_store(frame)
-                _sequential_scan(
-                    data, pos + seglen, frame, scan, htables,
-                    restart_interval, coef_store,
+            if pt != frame.setdefault("_pt", pt):
+                raise NotImplementedError(
+                    "JPEG: point transform changes between lossless scans"
                 )
-                pos = _next_marker(data, pos + seglen)
+            # a lossless frame may carry several scans (one component
+            # per scan, T.81 A.2.2): accumulate each scan's raw planes,
+            # output only when every frame component has been seen
+            store = frame.setdefault("_lossless_planes", {})
+            store.update(_lossless_scan(
+                data, start, frame, scan, htables, conditioning,
+                restart_interval, ss, pt,
+            ))
+            pos = _next_marker(data, start)
+            if len(store) < len(frame["comps"]):
                 continue
-            else:
-                if coef_store is None:
-                    coef_store = _alloc_coef_store(frame)
-                _progressive_scan(
-                    data, pos + seglen, frame, scan, htables, restart_interval,
-                    ss, se, ahal >> 4, ahal & 0x0F, coef_store,
+            if hier is None:  # single-frame stream: this is the image
+                return lossless_output(
+                    [store[c["id"]] for c in frame["comps"]],
+                    frame["prec"], pt,
                 )
-                pos = _next_marker(data, pos + seglen)
-                continue
-            if hier is None:
-                return out  # single-frame stream: out is the image
-            _hier_fold(hier, frame, out)  # raw per-component planes
-            pos = _next_marker(data, pos + seglen)
+            _hier_fold(hier, frame, dict(store))  # raw per-component planes
             continue
         pos += seglen
+    _check_lossless_complete(frame)
     if hier is not None:
         if coef_store is not None:  # store-based final frame ends at EOI
             _hier_fold(
                 hier, frame, _progressive_planes(frame, qtables, coef_store)
-            )
-        if frame is not None and frame.get("_lossless_planes") and len(
-            frame["_lossless_planes"]
-        ) < len(frame["comps"]):
-            missing = [c["id"] for c in frame["comps"]
-                       if c["id"] not in frame["_lossless_planes"]]
-            raise NotImplementedError(
-                "JPEG: lossless frame ended with undecoded "
-                f"components {missing}"
             )
         if frame is None or not hier["ref"]:
             raise NotImplementedError("JPEG: hierarchical stream with no frames")
@@ -649,29 +578,40 @@ def _decode_stream(data: bytes) -> np.ndarray:
     if coef_store is not None:
         frame["adobe"] = adobe
         return _progressive_reconstruct(frame, qtables, coef_store)
-    if frame is not None and frame.get("_lossless_planes"):
-        missing = [c["id"] for c in frame["comps"]
-                   if c["id"] not in frame["_lossless_planes"]]
-        raise NotImplementedError(
-            f"JPEG: lossless frame ended with undecoded components {missing}"
-        )
     raise NotImplementedError("JPEG: no scan data")
 
 
-def _decode_lossless_scan(
-    data, pos, frame, scan, htables, restart_interval, predictor, pt
-):
-    """T.81 Annex H lossless process: per-sample Huffman-coded
-    differences against one of the 7 spatial predictors, modulo-65536
-    reconstruction, point transform Pt, 2..16-bit precision (>8-bit
-    down-converts to uint8 by high-bits truncation, the 16-bit-PNG
-    convention), restart intervals (prediction resets to the default at
-    each RSTn, T.81 H.1.1). Sample-interleaved MCUs with 1×1 sampling
-    (the only layout real lossless files use). Output follows the
-    module conventions: gray (1 comp) or RGB-stacked (3 comps,
-    components taken as direct color planes)."""
+def _check_lossless_complete(frame: dict | None) -> None:
+    """A lossless frame may spread its components over several scans;
+    one that ends (at the next frame header or EOI) before every
+    component was decoded fails loudly instead of being output or
+    folded without them."""
+    store = frame.get("_lossless_planes") if frame is not None else None
+    if store and len(store) < len(frame["comps"]):
+        missing = [c["id"] for c in frame["comps"] if c["id"] not in store]
+        raise NotImplementedError(
+            f"JPEG: lossless frame ended with undecoded components {missing}"
+        )
+
+
+def _lossless_scan(
+    data, pos, frame, scan, htables, conditioning, restart_interval,
+    predictor, pt,
+) -> dict[int, np.ndarray]:
+    """T.81 Annex H lossless scan of either entropy coder → raw sample
+    planes {cid: int32 (h, w)}: reconstructed modulo 65536, still
+    point-transformed (lossless_output or the hierarchical fold consumes
+    them). The coder — Huffman (H.1.2, _huffman_lossless_decoders) or
+    arithmetic (H.2, jpeg_arith.lossless_decoders), picked by
+    frame["arith"] — supplies one difference decoder per scan
+    component and its restart reset; everything else is shared: the 7
+    spatial predictors (H.1.2.1), the default prediction at the first
+    sample of the scan and of each restart interval, and the 1-D Ra
+    predictor for the FIRST LINE of the scan and of each restart
+    interval (H.1.1 — libjpeg's jdlossls behavior), not just for the
+    single sample after RSTn. Sample-interleaved MCUs with 1×1 sampling
+    (the only layout real lossless files use)."""
     h, w = frame["h"], frame["w"]
-    prec = frame["prec"]
     if any(c["h"] != 1 or c["v"] != 1 for c, _t, _a in scan):
         raise NotImplementedError("JPEG: subsampled lossless components")
     # differential frames (hierarchical): Ss = 0 — no spatial
@@ -688,25 +628,26 @@ def _decode_lossless_scan(
             )
     elif not 1 <= predictor <= 7:
         raise NotImplementedError(f"JPEG: lossless predictor {predictor}")
+    if frame["arith"]:
+        decoders, restart = jpeg_arith.lossless_decoders(
+            data, pos, frame, scan, conditioning
+        )
+    else:
+        decoders, restart = _huffman_lossless_decoders(data, pos, scan, htables)
     planes = {c["id"]: np.zeros((h, w), np.int32) for c, _t, _a in scan}
-    r = _BitReader(data, pos)
-    default = 1 << (prec - 1 - pt)
+    units = [(decode, planes[c["id"]]) for decode, (c, _t, _a) in zip(decoders, scan)]
+    default = 1 << (frame["prec"] - 1 - pt)
     unit = 0  # lossless MCU = one sample position across scan components
     fresh = True  # next sample starts a scan/restart interval
-    ra_row = 0  # row where the current restart interval began: T.81
-    # H.1.1 uses the 1-D Ra predictor for the FIRST LINE of the scan
-    # AND of each restart interval (libjpeg's jdlossls behavior), not
-    # just for the single sample after RSTn
+    ra_row = 0  # row where the current restart interval began
     for y in range(h):
         for x in range(w):
             if restart_interval and unit and unit % restart_interval == 0:
-                r.restart()
+                restart()
                 fresh = True
                 ra_row = y
-            for comp, td, _ta in scan:
-                t = _huff_decode(r, htables[(0, td)])
-                diff = 32768 if t == 16 else (_extend(r.bits(t), t) if t else 0)
-                p = planes[comp["id"]]
+            for decode, p in units:
+                diff = decode(y, x, fresh, ra_row)
                 if diff_frame:
                     px = 0
                 elif fresh:
@@ -727,11 +668,24 @@ def _decode_lossless_scan(
                 p[y, x] = (px + diff) & 0xFFFF
             fresh = False
             unit += 1
-    if frame.get("_raw_planes"):
-        return planes
-    return lossless_output(
-        [planes[comp["id"]] for comp, _t, _a in scan], prec, pt
-    )
+    return planes
+
+
+def _huffman_lossless_decoders(data, pos, scan, htables):
+    """Huffman entropy layer of one lossless scan (H.1.2): one
+    difference decoder per scan component — an SSSS category, then
+    SSSS EXTEND'ed bits, SSSS = 16 being the bit-less 32768 — plus the
+    restart reset. The Huffman model has no context, so the position
+    arguments `_lossless_scan` passes are unused."""
+    r = _BitReader(data, pos)
+
+    def diff_decoder(tbl: _HuffTable):
+        def decode(_y: int, _x: int, _fresh: bool, _ra_row: int) -> int:
+            t = _huff_decode(r, tbl)
+            return 32768 if t == 16 else (_extend(r.bits(t), t) if t else 0)
+        return decode
+
+    return [diff_decoder(htables[(0, td)]) for _c, td, _ta in scan], r.restart
 
 
 def lossless_output(raw_planes: list, prec: int, pt: int):
@@ -848,91 +802,37 @@ def _hier_assemble(hier: dict, frame: dict, adobe) -> np.ndarray:
     return _assemble(planes, out_frame)
 
 
-def _sequential_scan(data, pos, frame, scan, htables, restart_interval, store):
-    """Sequential-DCT Huffman entropy decode (SOF0/SOF1, differential
-    SOF5 in hierarchical streams) into the zigzag coefficient store —
-    reconstruction is the batched-IDCT path shared with progressive
-    (_progressive_planes), so dequant + inverse zigzag + IDCT run as
-    one einsum per component instead of per-block tiny-ndarray ops.
-    Interleaved scans (Ns>1) walk the padded MCU grid; single-component
-    scans are non-interleaved per T.81 A.2.2 — block raster over the
-    component's own grid with one data unit per MCU — which also lets
-    a sequential frame spread its components across several scans.
-    Per block, coefficients accumulate in a plain Python list (the
-    entropy loop is serial bit work; per-coefficient ndarray stores
-    measured ~2× slower) and land in the store with one assignment."""
-    r = _BitReader(data, pos)
-    pred = {c["id"]: 0 for c, _td, _ta in scan}
-    # differential frames (hierarchical mode) code DC directly
-    # (PRED = 0); _progressive_planes omits their level shift
-    diff_frame = bool(frame.get("differential"))
+def _dct_scan(
+    data, pos, frame, scan, htables, conditioning, restart_interval,
+    ss, se, ah, al, store,
+) -> None:
+    """One DCT scan of either entropy coder into the zigzag coefficient
+    store — sequential, progressive, and their differential forms.
+    Reconstruction is the batched-IDCT path at EOI / the next frame
+    header (_progressive_planes), shared by every DCT frame type.
 
-    # hoist the per-scan-component Huffman tables + stores out of the
-    # per-block loop: the (class, id) dict lookups allocated a key
-    # tuple per block (two per block, hot path — guide §1.2)
-    resolved = {
-        c["id"]: (htables[(0, td)], htables[(1, ta)], store[c["id"]])
-        for c, td, ta in scan
-    }
-
-    def decode_block(cid, tdc, tac, cstore, by, bx):
-        # _huff_decode/_extend/bits are inlined here (the only per-
-        # coefficient call sites of the sequential scan): the bodies
-        # are copied line for line — peek16's fill check + 16-bit LUT
-        # probe, EXTEND's two-branch sign mapping — so the consumed bit
-        # stream and the raised invalid-code error are unchanged
-        # (guide §1.2 per-task work; pinned by the codec fuzz suite).
-        zz = [0] * 64
-        dc_len, dc_sym = tdc.lut_len, tdc.lut_sym
-        ac_len, ac_sym = tac.lut_len, tac.lut_sym
-        if r.nbits < 16:
-            r._fill()
-        w16 = (r.acc >> (r.nbits - 16)) & 0xFFFF
-        t = dc_len[w16]
-        if t == 0:
-            raise NotImplementedError("JPEG: invalid Huffman code")
-        r.nbits -= t
-        t = dc_sym[w16]
-        if t:
-            if r.nbits < t:
-                r._fill()
-            r.nbits -= t
-            v = (r.acc >> r.nbits) & ((1 << t) - 1)
-            diff = v - (1 << t) + 1 if v < (1 << (t - 1)) else v
-        else:
-            diff = 0
-        if diff_frame:
-            zz[0] = diff
-        else:
-            pred[cid] += diff
-            zz[0] = pred[cid]
-        k = 1
-        while k < 64:
-            if r.nbits < 16:
-                r._fill()
-            w16 = (r.acc >> (r.nbits - 16)) & 0xFFFF
-            ln = ac_len[w16]
-            if ln == 0:
-                raise NotImplementedError("JPEG: invalid Huffman code")
-            r.nbits -= ln
-            rs = ac_sym[w16]
-            rrrr, ssss = rs >> 4, rs & 0x0F
-            if ssss == 0:
-                if rrrr == 15:  # ZRL: 16 zeros
-                    k += 16
-                    continue
-                break  # EOB
-            k += rrrr
-            if k > 63:
-                raise NotImplementedError("JPEG: AC index overflow")
-            if r.nbits < ssss:
-                r._fill()
-            r.nbits -= ssss
-            v = (r.acc >> r.nbits) & ((1 << ssss) - 1)
-            zz[k] = v - (1 << ssss) + 1 if v < (1 << (ssss - 1)) else v
-            k += 1
-        cstore[by, bx] = zz
-
+    Data-unit order is T.81 A.2: an interleaved scan (Ns>1) walks the
+    padded MCU grid, each MCU holding h×v blocks per component; a
+    single-component scan is non-interleaved (A.2.2) — block raster
+    over the component's own grid, one data unit per MCU — which also
+    lets a frame spread its components across several scans. The coder
+    — Huffman (_huffman_dct_decoders) or arithmetic
+    (jpeg_arith.dct_decoders), picked by frame["arith"] — supplies one
+    block decoder per scan component, resolved here once per scan, and
+    the restart reset fired every `restart_interval` MCUs."""
+    if frame["progressive"]:
+        if ss == 0 and se != 0:
+            raise NotImplementedError("JPEG: DC scan with Se != 0")
+        if ss != 0 and len(scan) != 1:
+            raise NotImplementedError("JPEG: interleaved AC scan")
+    if frame["arith"]:
+        decoders, restart = jpeg_arith.dct_decoders(
+            data, pos, frame, scan, conditioning, ss, se, ah, al, store
+        )
+    else:
+        decoders, restart = _huffman_dct_decoders(
+            data, pos, frame, scan, htables, ss, se, ah, al, store
+        )
     n = 0  # MCUs since scan start (restart intervals count MCUs)
     if len(scan) > 1:  # interleaved: MCU order over the padded grid
         comps = frame["comps"]
@@ -940,34 +840,148 @@ def _sequential_scan(data, pos, frame, scan, htables, restart_interval, store):
         vmax = max(c["v"] for c in comps)
         mcus_x = -(-frame["w"] // (8 * hmax))
         mcus_y = -(-frame["h"] // (8 * vmax))
+        units = [
+            (decode, comp["v"], comp["h"])
+            for decode, (comp, _td, _ta) in zip(decoders, scan)
+        ]
         for my in range(mcus_y):
             for mx in range(mcus_x):
                 if restart_interval and n and n % restart_interval == 0:
-                    r.restart()
-                    for cid in pred:
-                        pred[cid] = 0
-                for comp, _td, _ta in scan:
-                    cid = comp["id"]
-                    tdc, tac, cstore = resolved[cid]
-                    for by in range(comp["v"]):
-                        for bx in range(comp["h"]):
-                            decode_block(
-                                cid, tdc, tac, cstore,
-                                my * comp["v"] + by, mx * comp["h"] + bx,
-                            )
+                    restart()
+                for decode, cv, ch in units:
+                    for by in range(cv):
+                        for bx in range(ch):
+                            decode(my * cv + by, mx * ch + bx)
                 n += 1
     else:
-        comp, _td, _ta = scan[0]
-        cid = comp["id"]
-        tdc, tac, cstore = resolved[cid]
-        bh, bw = _comp_blocks(frame, comp)
+        decode = decoders[0]
+        bh, bw = _comp_blocks(frame, scan[0][0])
         for by in range(bh):
             for bx in range(bw):
                 if restart_interval and n and n % restart_interval == 0:
-                    r.restart()
-                    pred[cid] = 0
-                decode_block(cid, tdc, tac, cstore, by, bx)
+                    restart()
+                decode(by, bx)
                 n += 1
+
+
+def _huffman_dct_decoders(data, pos, frame, scan, htables, ss, se, ah, al,
+                          store):
+    """Huffman entropy layer of one DCT scan whose entropy-coded data
+    starts at `pos`: one block decoder `(by, bx)` per scan component,
+    each decoding that data unit into `store[cid][by, bx]`, plus the
+    scan's restart reset (consume RSTn, zero the DC predictors and the
+    EOB run). The block kind follows the scan: sequential (F.2.2), or
+    progressive DC first / DC refine / AC band first / AC band refine
+    (G.1.2). Differential frames (hierarchical mode) code DC directly
+    (PRED = 0); _progressive_planes omits their level shift."""
+    r = _BitReader(data, pos)
+    pred = {c["id"]: 0 for c, _td, _ta in scan}
+    eobrun = 0
+    diff_frame = bool(frame.get("differential"))
+
+    def restart() -> None:
+        nonlocal eobrun
+        r.restart()
+        for cid in pred:
+            pred[cid] = 0
+        eobrun = 0
+
+    def sequential(cid, tdc, tac, cstore):
+        # Per block, coefficients accumulate in a plain Python list (the
+        # entropy loop is serial bit work; per-coefficient ndarray stores
+        # measured ~2× slower) and land in the store with one assignment.
+        dc_len, dc_sym = tdc.lut_len, tdc.lut_sym
+        ac_len, ac_sym = tac.lut_len, tac.lut_sym
+
+        def decode_block(by, bx):
+            # _huff_decode/_extend/bits are inlined here (the only per-
+            # coefficient call sites of the sequential scan): the bodies
+            # are copied line for line — peek16's fill check + 16-bit LUT
+            # probe, EXTEND's two-branch sign mapping — so the consumed
+            # bit stream and the raised invalid-code error are unchanged
+            # (pinned by the codec fuzz suite).
+            zz = [0] * 64
+            if r.nbits < 16:
+                r._fill()
+            w16 = (r.acc >> (r.nbits - 16)) & 0xFFFF
+            t = dc_len[w16]
+            if t == 0:
+                raise NotImplementedError("JPEG: invalid Huffman code")
+            r.nbits -= t
+            t = dc_sym[w16]
+            if t:
+                if r.nbits < t:
+                    r._fill()
+                r.nbits -= t
+                v = (r.acc >> r.nbits) & ((1 << t) - 1)
+                diff = v - (1 << t) + 1 if v < (1 << (t - 1)) else v
+            else:
+                diff = 0
+            if diff_frame:
+                zz[0] = diff
+            else:
+                pred[cid] += diff
+                zz[0] = pred[cid]
+            k = 1
+            while k < 64:
+                if r.nbits < 16:
+                    r._fill()
+                w16 = (r.acc >> (r.nbits - 16)) & 0xFFFF
+                ln = ac_len[w16]
+                if ln == 0:
+                    raise NotImplementedError("JPEG: invalid Huffman code")
+                r.nbits -= ln
+                rs = ac_sym[w16]
+                rrrr, ssss = rs >> 4, rs & 0x0F
+                if ssss == 0:
+                    if rrrr == 15:  # ZRL: 16 zeros
+                        k += 16
+                        continue
+                    break  # EOB
+                k += rrrr
+                if k > 63:
+                    raise NotImplementedError("JPEG: AC index overflow")
+                if r.nbits < ssss:
+                    r._fill()
+                r.nbits -= ssss
+                v = (r.acc >> r.nbits) & ((1 << ssss) - 1)
+                zz[k] = v - (1 << ssss) + 1 if v < (1 << (ssss - 1)) else v
+                k += 1
+            cstore[by, bx] = zz
+        return decode_block
+
+    def block_decoder(comp, td, ta):
+        cid = comp["id"]
+        cstore = store[cid]
+        if not frame["progressive"]:
+            return sequential(cid, htables[(0, td)], htables[(1, ta)], cstore)
+        if ss == 0 and ah == 0:  # first DC scan: point-transformed DC
+            tdc = htables[(0, td)]
+
+            def dc_first(by, bx):
+                t = _huff_decode(r, tdc)
+                diff = _extend(r.bits(t), t) if t else 0
+                if not diff_frame:
+                    pred[cid] += diff
+                    diff = pred[cid]
+                cstore[by, bx, 0] = diff << al
+            return dc_first
+        if ss == 0:  # DC refinement: one bit, OR into position Al
+            bit = 1 << al
+
+            def dc_refine(by, bx):
+                if r.bit():
+                    cstore[by, bx, 0] |= bit
+            return dc_refine
+        tac = htables[(1, ta)]
+        band = _ac_first if ah == 0 else _ac_refine
+
+        def ac(by, bx):
+            nonlocal eobrun
+            eobrun = band(r, cstore[by, bx], tac, ss, se, al, eobrun)
+        return ac
+
+    return [block_decoder(*s) for s in scan], restart
 
 
 def _assemble(planes: dict, frame: dict) -> np.ndarray:
@@ -1039,12 +1053,12 @@ def _assemble(planes: dict, frame: dict) -> np.ndarray:
     )
 
 
-# --- progressive (SOF2) ------------------------------------------------
+# --- coefficient store; Huffman progressive AC bands (SOF2) -----------
 #
 # A progressive frame spreads each block's 64 coefficients over many
 # scans (spectral selection Ss..Se × successive approximation Ah/Al,
-# T.81 Annex G). Scans accumulate QUANTIZED coefficients into a
-# per-component store; dequant + IDCT happen once at EOI. DC scans may
+# T.81 Annex G). Every DCT scan accumulates QUANTIZED coefficients into
+# a per-component store; dequant + IDCT happen once at EOI. DC scans may
 # interleave components (MCU order); AC scans are single-component in
 # block-raster order over that component's own grid.
 
@@ -1094,16 +1108,6 @@ def _comp_blocks(frame: dict, c: dict) -> tuple[int, int]:
     pw = -(-frame["w"] * c["h"] // hmax)
     ph = -(-frame["h"] * c["v"] // vmax)
     return -(-ph // 8), -(-pw // 8)
-
-
-def _dc_prog(r: _BitReader, blk: np.ndarray, htab, ah: int, al: int, pred: dict, cid: int) -> None:
-    if ah == 0:  # first DC scan: diff-coded point-transformed DC
-        t = _huff_decode(r, htab)
-        diff = _extend(r.bits(t), t) if t else 0
-        pred[cid] += diff
-        blk[0] = pred[cid] << al
-    elif r.bit():  # refinement: one bit, OR into position Al
-        blk[0] |= 1 << al
 
 
 def _ac_first(r: _BitReader, blk: np.ndarray, htab, ss: int, se: int, al: int, eobrun: int) -> int:
@@ -1179,72 +1183,6 @@ def _ac_refine(r: _BitReader, blk: np.ndarray, htab, ss: int, se: int, al: int, 
             k += 1
         eobrun -= 1
     return eobrun
-
-
-def _progressive_scan(data, pos, frame, scan, htables, restart_interval,
-                      ss, se, ah, al, store) -> None:
-    comps = frame["comps"]
-    r = _BitReader(data, pos)
-    pred = {c["id"]: 0 for c in comps}
-    # differential frames: DC coded directly (PRED = 0) — zeroing the
-    # predictor after every block makes _dc_prog store the raw value
-    diff_frame = bool(frame.get("differential"))
-    eobrun = 0
-    unit = 0  # restart counting: MCUs (interleaved) or blocks
-
-    def maybe_restart():
-        nonlocal pred, eobrun
-        if restart_interval and unit and unit % restart_interval == 0:
-            r.restart()
-            pred = {c["id"]: 0 for c in comps}
-            eobrun = 0
-
-    if ss == 0:  # DC scan
-        if se != 0:
-            raise NotImplementedError("JPEG: DC scan with Se != 0")
-        if len(scan) > 1:  # interleaved, MCU order
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            mcus_x = -(-frame["w"] // (8 * hmax))
-            mcus_y = -(-frame["h"] // (8 * vmax))
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    maybe_restart()
-                    for comp, td, _ta in scan:
-                        cid = comp["id"]
-                        for by in range(comp["v"]):
-                            for bx in range(comp["h"]):
-                                blk = store[cid][my * comp["v"] + by, mx * comp["h"] + bx]
-                                _dc_prog(r, blk, htables.get((0, td)), ah, al, pred, cid)
-                                if diff_frame:
-                                    pred[cid] = 0
-                    unit += 1
-        else:
-            comp, td, _ta = scan[0]
-            bh, bw = _comp_blocks(frame, comp)
-            for by in range(bh):
-                for bx in range(bw):
-                    maybe_restart()
-                    _dc_prog(r, store[comp["id"]][by, bx], htables.get((0, td)),
-                             ah, al, pred, comp["id"])
-                    if diff_frame:
-                        pred[comp["id"]] = 0
-                    unit += 1
-        return
-
-    # AC scan: always single-component, block-raster over its own grid
-    if len(scan) != 1:
-        raise NotImplementedError("JPEG: interleaved AC scan")
-    comp, _td, ta = scan[0]
-    htab = htables[(1, ta)]
-    arr = store[comp["id"]]
-    bh, bw = _comp_blocks(frame, comp)
-    dec = _ac_first if ah == 0 else _ac_refine
-    for by in range(bh):
-        for bx in range(bw):
-            maybe_restart()
-            eobrun = dec(r, arr[by, bx], htab, ss, se, al, eobrun)
-            unit += 1
 
 
 def _progressive_planes(frame, qtables, store) -> dict:

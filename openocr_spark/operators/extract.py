@@ -38,12 +38,18 @@ from pyspark.sql import functions as F
 
 from openocr_spark import schemas
 from openocr_spark.config import DEFAULT_CONFIG, ExtractConfig
+from openocr_spark.kernels import decode_heads as H
 from openocr_spark.kernels.detection import (
     assign_regions_to_boxes,
     detect_boxes,
     sorted_boxes,
 )
-from openocr_spark.kernels.recognition import ctc_greedy_decode
+from openocr_spark.kernels.recognition import (
+    ctc_greedy_decode,
+    gtc_decode,
+    nrtr_greedy_decode,
+    srn_fixed_decode,
+)
 from openocr_spark.operators.boilerplate import is_boilerplate
 
 
@@ -58,74 +64,61 @@ def explode_spans(documents: DataFrame) -> DataFrame:
     ).select("doc_id", "span_idx", "span.*")
 
 
-TOKENIZER_HEADS = frozenset({"unirec", "cmer", "mgp_bpe", "mgp_wp"})
-# heads whose reference tools emit NO confidence (and never pass
-# through a drop_score filter) — exempt from the score cut, else the
-# default drop_score would silently drop every decoded text
-NO_CONF_HEADS = frozenset({"unirec", "cmer"})
-
-
-def _argmax_ids_probs(logits: np.ndarray):
-    """Softmax argmax ids + their probabilities — the bridge from a
-    single-logits buffer to the token-id heads (the analog of the AR
-    loop's per-step argmax in tools/infer_unirec_onnx.py:288-331).
-    Thin alias of the kernel-side _argmax_conf so the two can never
-    diverge."""
-    from openocr_spark.kernels.decode_heads import _argmax_conf
-
-    return _argmax_conf(logits)
-
-
 def _ce_head(logits: np.ndarray):
     """CE is a whole-image single-position head — feed it position 0."""
-    from openocr_spark.kernels import decode_heads as H
-
     return H.ce_decode(logits[0] if logits is not None and len(logits) else logits)
 
 
 def _gtc_head(logits: np.ndarray):
     """GTC guidance branch only (the inference path; the CTC auxiliary
     branch needs its own logits tensor)."""
-    from openocr_spark.kernels.recognition import gtc_decode
-
     return gtc_decode(logits, None, only_gtc=True)[0]
 
 
+# the single-logits decode heads by config name — the build_post_process
+# analog (openrec/postprocess/__init__.py maps the yml PostProcess name
+# to a decode class; here cfg.rec_head maps to a kernel)
+_LOGIT_HEADS = {
+    "ctc": ctc_greedy_decode,
+    "nrtr": nrtr_greedy_decode,
+    # char primary: the CharLabelDecode main branch decodes over the
+    # same NRTR vocabulary with the same EOS/skip rules
+    # (char_postprocess.py:17-66) — the aux box branch needs its own
+    # logits (kernels: H.char_dual_decode)
+    "char": nrtr_greedy_decode,
+    "srn": srn_fixed_decode,
+    "gtc": _gtc_head,
+    "ce": _ce_head,
+    "abinet": H.abinet_decode,
+    "cppd": H.cppd_decode,
+    "smtr": H.smtr_decode,
+    "lister": H.lister_decode,
+    "igtr": H.igtr_decode,
+    "visionlan": H.visionlan_decode,
+    "mgp_char": H.mgp_char_decode,
+}
+# heads that decode token ids through the trained-tokenizer id→token map
+TOKENIZER_HEADS = ("unirec", "cmer", "mgp_bpe", "mgp_wp")
+# heads whose reference tools emit NO confidence (and never pass
+# through a drop_score filter) — exempt from the score cut, else the
+# default drop_score would silently drop every decoded text
+NO_CONF_HEADS = frozenset({"unirec", "cmer"})
+# every head name reachable from ExtractConfig(rec_head=...) — the
+# config-selectable surface the dispatch test enumerates against the
+# implemented-kernel list
+REC_HEAD_NAMES: tuple[str, ...] = (*_LOGIT_HEADS, *TOKENIZER_HEADS)
+
+
 def _decode_fn(name: str, token_map=None):
-    """Decode-head dispatch by config name — the build_post_process
-    analog (openrec/postprocess/__init__.py maps the yml PostProcess
-    name to a decode class; here it maps cfg.rec_head to a kernel).
-    Every single-logits-compatible head family is reachable; the
+    """Decode-head dispatch by config name (see _LOGIT_HEADS). Every
+    single-logits-compatible head family is reachable; the
     tokenizer-backed heads additionally require cfg.token_map (the
     trained-tokenizer artifact) and fail fast at closure-build time
-    without it. Dual-tensor heads (gtc aux, char aux box branch, mgp
-    fusion) expose their primary branch here and their full form as
-    direct kernel calls."""
-    from openocr_spark.kernels import decode_heads as H
-    from openocr_spark.kernels.recognition import (
-        nrtr_greedy_decode,
-        srn_fixed_decode,
-    )
-
-    table = {
-        "ctc": ctc_greedy_decode,
-        "nrtr": nrtr_greedy_decode,
-        # char primary: the CharLabelDecode main branch decodes over the
-        # same NRTR vocabulary with the same EOS/skip rules
-        # (char_postprocess.py:17-66) — the aux box branch needs its own
-        # logits (kernels: H.char_dual_decode)
-        "char": nrtr_greedy_decode,
-        "srn": srn_fixed_decode,
-        "gtc": _gtc_head,
-        "ce": _ce_head,
-        "abinet": H.abinet_decode,
-        "cppd": H.cppd_decode,
-        "smtr": H.smtr_decode,
-        "lister": H.lister_decode,
-        "igtr": H.igtr_decode,
-        "visionlan": H.visionlan_decode,
-        "mgp_char": H.mgp_char_decode,
-    }
+    without it — they take the softmax argmax ids + probabilities, the
+    analog of the AR loop's per-step argmax in
+    tools/infer_unirec_onnx.py:288-331. Dual-tensor heads (gtc aux,
+    char aux box branch, mgp fusion) expose their primary branch here
+    and their full form as direct kernel calls."""
     if name in TOKENIZER_HEADS:
         if not token_map:
             raise ValueError(
@@ -136,15 +129,15 @@ def _decode_fn(name: str, token_map=None):
         id_to_token = dict(token_map)
         if name == "unirec":
             def tok_head(logits):  # noqa: ANN001
-                ids, _ = _argmax_ids_probs(logits)
+                ids, _ = H._argmax_conf(logits)
                 return H.unirec_decode(ids, id_to_token)
         elif name == "cmer":
             def tok_head(logits):  # noqa: ANN001
-                ids, _ = _argmax_ids_probs(logits)
+                ids, _ = H._argmax_conf(logits)
                 return H.cmer_decode(ids, id_to_token)
         elif name == "mgp_bpe":
             def tok_head(logits):  # noqa: ANN001
-                ids, probs = _argmax_ids_probs(logits)
+                ids, probs = H._argmax_conf(logits)
                 return H.mgp_bpe_decode(ids, probs, id_to_token)
         else:  # mgp_wp
             from openocr_spark.kernels.tokenizer import sep_id
@@ -152,27 +145,18 @@ def _decode_fn(name: str, token_map=None):
             sep = sep_id(tuple(id_to_token.items()))
 
             def tok_head(logits):  # noqa: ANN001
-                ids, probs = _argmax_ids_probs(logits)
+                ids, probs = H._argmax_conf(logits)
                 return H.mgp_wp_decode(ids, probs, id_to_token, sep_id=sep)
 
         return tok_head
     try:
-        return table[name]
+        return _LOGIT_HEADS[name]
     except KeyError:
         raise ValueError(
             f"unknown rec_head {name!r}; expected one of "
-            f"{', '.join(sorted(table))}, {', '.join(sorted(TOKENIZER_HEADS))}"
+            f"{', '.join(sorted(_LOGIT_HEADS))}, "
+            f"{', '.join(sorted(TOKENIZER_HEADS))}"
         ) from None
-
-
-# every head name reachable from ExtractConfig(rec_head=...) — the
-# config-selectable surface the dispatch test enumerates against the
-# implemented-kernel list
-REC_HEAD_NAMES: tuple[str, ...] = (
-    "ctc", "nrtr", "char", "srn", "gtc", "ce", "abinet", "cppd", "smtr",
-    "lister", "igtr", "visionlan", "mgp_char",
-    "unirec", "cmer", "mgp_bpe", "mgp_wp",
-)
 
 
 def _read_media(prob: np.ndarray, regions: list[dict], cfg: ExtractConfig, decode):

@@ -436,10 +436,14 @@ def encode_jpeg_arith_progressive(
     adobe_transform: int | None = None,
     dc_cond: tuple[int, int] = (0, 1),
     kx: int = 5,
+    restart_interval: int = 0,
 ) -> bytes:
     """Progressive arithmetic (SOF10) encoding, fully refined — the
     package decoder's output must be bit-identical to decoding the
-    baseline Huffman encoding of the same image."""
+    baseline Huffman encoding of the same image. restart_interval > 0
+    emits DRI and, in every scan, an RSTn after each `restart_interval`
+    MCUs (DC scans) or blocks (AC scans): the coder is flushed and the
+    statistics and DC predictors restart, as in encode_jpeg_arith."""
     q = np.array(qtable if qtable is not None else K1, dtype=np.int32)
     h, w = img.shape[:2]
     planes, samps, app14 = _color_planes(img, subsample, adobe_transform)
@@ -477,13 +481,27 @@ def encode_jpeg_arith_progressive(
         body += bytes([ss, se, (ah << 4) | al])
         return _seg(0xDA, body)
 
+    def restart_marker(chunks, enc, n):
+        """Flush the scan's codestream so far and append RSTn (n = the
+        number of restarts already emitted in this scan)."""
+        chunks.append(enc.flush())
+        chunks.append(bytes([0xFF, 0xD0 + (n % 8)]))
+
     def dc_scan(ah, al):
         enc = ArithEncoder()
         stats = _Stats(1, 1)
         dc_context = [0] * nc
         pred = [0] * nc
+        chunks: list[bytes] = []
+        n = 0
         for my in range(mcus_y):
             for mx in range(mcus_x):
+                if restart_interval and n and n % restart_interval == 0:
+                    restart_marker(chunks, enc, n // restart_interval - 1)
+                    stats = _Stats(1, 1)
+                    dc_context = [0] * nc
+                    pred = [0] * nc
+                n += 1
                 for ci, (sh, sv) in enumerate(samps):
                     for by in range(sv):
                         for bx in range(sh):
@@ -498,14 +516,21 @@ def encode_jpeg_arith_progressive(
                                            ci, diff, dc_cond)
                             else:
                                 enc.encode(stats.fixed, (zz0 >> al) & 1)
-        return sos_seg(list(range(1, nc + 1)), 0, 0, ah, al) + enc.flush()
+        chunks.append(enc.flush())
+        return sos_seg(list(range(1, nc + 1)), 0, 0, ah, al) + b"".join(chunks)
 
     def ac_scan(ci, ss, se, ah, al):
         enc = ArithEncoder()
         stats = _Stats(1, 1)
         _tbh, _tbw, cbh, cbw = grids[ci]
+        chunks: list[bytes] = []
+        n = 0
         for by in range(cbh):
             for bx in range(cbw):
+                if restart_interval and n and n % restart_interval == 0:
+                    restart_marker(chunks, enc, n // restart_interval - 1)
+                    stats = _Stats(1, 1)
+                n += 1
                 zz = coefs[ci][by, bx]
                 if ah == 0:
                     _enc_prog_ac_first(enc, stats.ac[0], stats, kx, zz,
@@ -513,7 +538,8 @@ def encode_jpeg_arith_progressive(
                 else:
                     _enc_prog_ac_refine(enc, stats.ac[0], stats, zz,
                                         ss, se, al)
-        return sos_seg([ci + 1], ss, se, ah, al) + enc.flush()
+        chunks.append(enc.flush())
+        return sos_seg([ci + 1], ss, se, ah, al) + b"".join(chunks)
 
     head = bytearray(b"\xff\xd8")
     head += app14
@@ -523,6 +549,8 @@ def encode_jpeg_arith_progressive(
         sof += bytes([i + 1, (sh << 4) | sv, 0])
     head += _seg(0xCA, sof)  # SOF10: progressive arithmetic
     head += _seg(0xCC, bytes([0x00, (dc_cond[1] << 4) | dc_cond[0], 0x10, kx]))
+    if restart_interval:
+        head += _seg(0xDD, struct.pack(">H", restart_interval))
     out = bytearray(head)
     out += dc_scan(0, 1)
     for ci in range(nc):

@@ -29,9 +29,17 @@ def _img() -> np.ndarray:
 def _streams() -> dict[str, bytes]:
     import struct
 
-    from jpeg_arith_ref_encoder import encode_jpeg_arith
+    from jpeg_arith_ref_encoder import (
+        encode_jpeg_arith,
+        encode_jpeg_arith_lossless,
+        encode_jpeg_arith_progressive,
+    )
     from jpeg_hier_ref_encoder import encode_jpeg_hierarchical
-    from jpeg_ref_encoder import encode_jpeg, encode_jpeg_lossless
+    from jpeg_ref_encoder import (
+        encode_jpeg,
+        encode_jpeg_lossless,
+        encode_jpeg_progressive,
+    )
     from tiff_ref_encoder import write_tiff
     from webp_ref_encoder import encode_vp8l
 
@@ -121,6 +129,19 @@ def _streams() -> dict[str, bytes]:
     out["pfm"] = _write_pfm(img.astype(np.float32) / 255.0)
 
     out["jpeg_arith"] = encode_jpeg_arith(img, qtable=[2] * 64)
+    # every path of the shared JPEG scan walk: progressive and lossless
+    # under both entropy coders, with restart intervals (qtable and
+    # interval picked so each stream also carries a stuffed FF00 for
+    # the cut test below)
+    out["jpeg_progressive"] = encode_jpeg_progressive(
+        img, qtable=[2] * 64, restart_interval=2
+    )
+    out["jpeg_arith_progressive"] = encode_jpeg_arith_progressive(
+        img, qtable=[3] * 64, restart_interval=3
+    )
+    out["jpeg_arith_lossless"] = encode_jpeg_arith_lossless(
+        img, predictor=4, restart_interval=7
+    )
     out["jpeg_hier"] = encode_jpeg_hierarchical(
         img, [{"kind": "lossless"}, {"kind": "lossless", "exp": (1, 1)}]
     )
@@ -234,7 +255,10 @@ def test_next_marker_returns_len_at_end_of_data():
         assert _next_marker(data, 0) == len(data)
 
 
-@pytest.mark.parametrize("fmt", ["jpeg", "jpeg_arith"])
+@pytest.mark.parametrize("fmt", [
+    "jpeg", "jpeg_arith", "jpeg_progressive", "jpeg_arith_progressive",
+    "jpeg_arith_lossless",
+])
 def test_jpeg_cut_after_stuffed_ff00_is_not_a_type_error(fmt):
     """Cutting a JPEG stream right after an FF00 pair once made the
     marker scan return None, which escaped decode_bytes as TypeError."""

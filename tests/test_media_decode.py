@@ -1390,7 +1390,9 @@ def test_jpeg_arith_progressive_equals_baseline():
     BIT-IDENTICAL to the baseline Huffman encoding — the same
     invariant the Huffman-progressive and sequential-arithmetic paths
     pin, over the full scan script (DC first/refine at the fixed bin,
-    AC bands first at Al=2, refine 2→1→0)."""
+    AC bands first at Al=2, refine 2→1→0). Restart intervals reset the
+    coder, statistics and DC predictors in every scan kind, counted in
+    MCUs for the interleaved DC scans and in blocks for the AC scans."""
     from jpeg_arith_ref_encoder import encode_jpeg_arith_progressive
     from jpeg_ref_encoder import K1, encode_jpeg
     from openocr_spark.kernels.jpeg_format import decode_jpeg
@@ -1404,6 +1406,8 @@ def test_jpeg_arith_progressive_equals_baseline():
         (rgb, {"subsample": True}),
         (gray[:17, :33], {}),
         (gray, {"dc_cond": (1, 2), "kx": 3}),
+        (gray[:17, :33], {"restart_interval": 2}),
+        (rgb[:17, :33], {"subsample": True, "restart_interval": 3}),
     ):
         q = kw.pop("qtable", [1] * 64)
         huff = decode_jpeg(encode_jpeg(
